@@ -10,6 +10,8 @@ streamalert_cli/athena/helpers.py:178-189). Timestamps use the reference's
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,6 +40,73 @@ ALERT_SCHEMA = T.StructType([
 ])
 
 
+RULE_META_DDL = (
+    "struct<name:string, description:string, outputs:array<string>, "
+    "context:map<string,string>, merge_by_keys:array<string>, "
+    "merge_window_mins:bigint, staged:boolean>"
+)
+
+
+def rule_meta_table(entries: list[tuple]) -> Column:
+    """Alert metadata of several rules as one literal array of
+    RULE_META_DDL structs, from (rule, staged, outputs) entries; ``outputs``
+    (when not None) overrides the rule's static list. The rules engine
+    indexes it by rule. Built as from_json over one JSON literal, which the
+    optimizer folds to a constant: one expression for the whole table
+    instead of a dozen per rule."""
+    rows = [
+        {
+            "name": rule.name,
+            "description": rule.description,
+            "outputs": list(rule.outputs if outputs is None else outputs),
+            "context": {k: str(v) for k, v in rule.context.items()} if rule.context else None,
+            "merge_by_keys": list(rule.merge_by_keys),
+            "merge_window_mins": rule.merge_window_mins,
+            "staged": staged,
+        }
+        for rule, staged, outputs in entries
+    ]
+    return F.from_json(F.lit(json.dumps(rows)), f"array<{RULE_META_DDL}>")
+
+
+def alert_row(
+    meta: Column,
+    record_json: Column,
+    created: Column,
+    dt: Column,
+    cluster: str = "",
+    source_service: str = "",
+    source_entity: str = "",
+    log_type: str = "",
+    alert_id: Column | None = None,
+    outputs: Column | None = None,
+) -> list[Column]:
+    """Projection list of one alert row (ALERT_SCHEMA order) from a
+    ``rule_meta_table`` struct and the triggering record's JSON text; ``created``
+    and ``dt`` are the formatted event time. ``outputs`` replaces the
+    metadata's outputs (dynamic outputs)."""
+    aid = alert_id if alert_id is not None else F.uuid()
+    return [
+        aid.cast("string").alias("id"),
+        meta["name"].alias("rule_name"),
+        meta["description"].alias("rule_description"),
+        record_json.alias("record"),
+        (outputs if outputs is not None else meta["outputs"]).alias("outputs"),
+        created.alias("created"),
+        F.lit(cluster).alias("cluster"),
+        meta["context"].alias("context"),
+        F.lit(source_entity).alias("log_source"),
+        F.lit(log_type).alias("log_type"),
+        F.lit(None).cast("map<string,string>").alias("publishers"),
+        F.lit(source_entity).alias("source_entity"),
+        F.lit(source_service).alias("source_service"),
+        meta["staged"].alias("staged"),
+        meta["merge_by_keys"].alias("merge_by_keys"),
+        meta["merge_window_mins"].alias("merge_window_mins"),
+        dt.alias("dt"),
+    ]
+
+
 def alert_columns(
     rule,
     record_json: Column,
@@ -54,34 +123,15 @@ def alert_columns(
     (reference _rule_analysis -> Alert(...), rules_engine.py:183-217).
     outputs_override replaces the rule's static outputs (staging gate /
     dynamic outputs)."""
-    aid = alert_id if alert_id is not None else F.uuid()
-    created = F.date_format(event_time, ALERT_TS_FMT)
-    ctx = (
-        F.create_map(*[x for k, v in (rule.context or {}).items()
-                       for x in (F.lit(k), F.lit(str(v)))])
-        if rule.context else F.lit(None).cast("map<string,string>")
+    return alert_row(
+        rule_meta_table([(rule, staged, None)])[0],
+        record_json,
+        F.date_format(event_time, ALERT_TS_FMT),
+        F.date_format(event_time, DT_PARTITION_FMT),
+        cluster=cluster,
+        source_service=source_service,
+        source_entity=source_entity,
+        log_type=log_type,
+        alert_id=alert_id,
+        outputs=outputs_override,
     )
-    outputs = (
-        outputs_override
-        if outputs_override is not None
-        else F.array(*[F.lit(o) for o in rule.outputs]).cast("array<string>")
-    )
-    return [
-        aid.cast("string").alias("id"),
-        F.lit(rule.name).alias("rule_name"),
-        F.lit(rule.description).alias("rule_description"),
-        record_json.alias("record"),
-        outputs.alias("outputs"),
-        created.alias("created"),
-        F.lit(cluster).alias("cluster"),
-        ctx.alias("context"),
-        F.lit(source_entity).alias("log_source"),
-        F.lit(log_type).alias("log_type"),
-        F.lit(None).cast("map<string,string>").alias("publishers"),
-        F.lit(source_entity).alias("source_entity"),
-        F.lit(source_service).alias("source_service"),
-        F.lit(staged).alias("staged"),
-        F.array(*[F.lit(k) for k in rule.merge_by_keys]).cast("array<string>").alias("merge_by_keys"),
-        F.lit(rule.merge_window_mins).cast("bigint").alias("merge_window_mins"),
-        F.date_format(event_time, DT_PARTITION_FMT).alias("dt"),
-    ]

@@ -25,7 +25,9 @@ schema; routing (service, resource) -> 1-2 candidates keeps that constant.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from collections.abc import Callable
+from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -174,7 +176,12 @@ class ClassifiedBatch:
     the quarantine frame of records that matched no schema."""
 
     by_log_type: dict[str, DataFrame]
-    invalid: DataFrame
+    build_invalid: Callable[[], DataFrame] = field(repr=False)
+
+    @cached_property
+    def invalid(self) -> DataFrame:
+        """Built on first access: the detection path never reads it."""
+        return self.build_invalid()
 
     def counts(self) -> dict[str, int]:
         out = {name: df.count() for name, df in self.by_log_type.items()}
@@ -185,6 +192,49 @@ class ClassifiedBatch:
 class Classifier:
     def __init__(self, registry: SchemaRegistry):
         self.registry = registry
+        # per candidate group: the parse/validity/coercion columns. They
+        # reference columns by name only, so one build serves every frame
+        # (micro-batch) classified on the same route.
+        self._columns: dict[tuple, tuple] = {}
+
+    def _group_columns(self, prepared: list, idxs: list[int], rcol: str,
+                       has_env: bool) -> tuple[Column, list[tuple[Column, list[Column]]]]:
+        """(trials struct, [(row condition, output columns)] per candidate)
+        for candidates ``idxs`` sharing one exploded row shape."""
+        key = (rcol, has_env, tuple((i, id(prepared[i][0])) for i in idxs))
+        hit = self._columns.get(key)
+        if hit is not None:
+            return hit[0], hit[1]
+        trials = F.struct(*[
+            prepared[i][1].parse_expr(prepared[i][0], F.col(rcol)).alias(f"t{i}")
+            for i in idxs
+        ])
+        valids = {
+            i: prepared[i][1].valid_expr(
+                prepared[i][0], F.col("_sa_raw"), F.col(f"_sa_t.t{i}"))
+            for i in idxs
+        }
+        outs = []
+        # first-match-wins: schema i applies only where schemas 0..i-1 failed.
+        # Negation applies within a shared row shape; differing row shapes
+        # (json_path explode) are disjoint by source construction in the
+        # reference config.
+        for i in idxs:
+            schema = prepared[i][0]
+            parsed = F.col(f"_sa_t.t{i}")
+            cond = valids[i]
+            for j in idxs:
+                if j < i:
+                    cond = cond & ~valids[j]
+            typed = coerce_struct(parsed, schema)
+            cond = cond & coercion_valid(parsed, typed, schema) & log_patterns_filter(typed, schema)
+            cols = [typed.alias("record"), F.lit(schema.name).alias("log_schema_type")]
+            if has_env:
+                cols.append(F.col("streamalert_envelope_keys"))
+            outs.append((cond, cols))
+        # the schemas stay referenced, so their ids in the key stay unique
+        self._columns[key] = (trials, outs, [prepared[i][0] for i in idxs])
+        return trials, outs
 
     def classify(
         self,
@@ -219,96 +269,79 @@ class Classifier:
         for i, (_, _, pdf, rcol) in enumerate(prepared):
             groups.setdefault((id(pdf), rcol), []).append(i)
 
-        barriers: dict[int, tuple[DataFrame, dict[int, Column], list[int]]] = {}
+        frames: dict[int, DataFrame] = {}
         for (_, rcol), idxs in groups.items():
             pdf = prepared[idxs[0]][2]
-            trials = F.struct(*[
-                prepared[i][1].parse_expr(prepared[i][0], F.col(rcol)).alias(f"t{i}")
-                for i in idxs
-            ])
             extra = (["streamalert_envelope_keys"]
                      if "streamalert_envelope_keys" in pdf.columns else [])
+            trials, outs = self._group_columns(prepared, idxs, rcol, bool(extra))
             bdf = pdf.select(
                 *keep_cols, *extra,
                 F.col(rcol).alias("_sa_raw"),
                 F.explode(F.array(trials)).alias("_sa_t"),
             )
-            valids = {
-                i: prepared[i][1].valid_expr(
-                    prepared[i][0], F.col("_sa_raw"), F.col(f"_sa_t.t{i}"))
-                for i in idxs
-            }
-            for i in idxs:
-                barriers[i] = (bdf, valids, idxs)
+            for i, (cond, cols) in zip(idxs, outs):
+                frames[i] = bdf.filter(cond).select(*keep_cols, *cols)
+        by_log_type = {prepared[i][0].name: frames[i] for i in range(len(prepared))}
 
-        by_log_type: dict[str, DataFrame] = {}
-        # first-match-wins: schema i applies only where schemas 0..i-1 failed.
-        # Negation applies within a shared row shape; differing row shapes
-        # (json_path explode) are disjoint by source construction in the
-        # reference config.
-        for i, (schema, p, pdf, rcol) in enumerate(prepared):
-            bdf, valids, idxs = barriers[i]
-            parsed = F.col(f"_sa_t.t{i}")
-            cond = valids[i]
-            for j in idxs:
-                if j < i:
-                    cond = cond & ~valids[j]
-            typed = coerce_struct(parsed, schema)
-            cond = cond & coercion_valid(parsed, typed, schema) & log_patterns_filter(typed, schema)
-            cols = [typed.alias("record"), F.lit(schema.name).alias("log_schema_type")]
-            if "streamalert_envelope_keys" in bdf.columns:
-                cols.append(F.col("streamalert_envelope_keys"))
-            out = bdf.filter(cond).select(*keep_cols, *cols)
-            by_log_type[schema.name] = out
+        return ClassifiedBatch(
+            by_log_type=by_log_type,
+            build_invalid=lambda: self._invalid(df, raw_col, keep_cols, prepared, groups))
 
-        # invalid accounting. Base-shape candidates judge the original
-        # payload: a payload matching no candidate is one invalid record
-        # (classifier.py:202-215). Line-exploded CSV groups judge each
-        # line individually (parsers.py:705-712 — invalid lines within a
-        # matched payload are still bad records); lines whose payload a
-        # base-shape candidate accepts are excluded. json_path-exploded
-        # JSON schemas stay judged on their own shape (excluded).
-        # Diagnostics path — the re-derived parses cost ~2 evaluations
-        # per row, not ~20.
-        def _base_valid_expr() -> Column | None:
+    def _invalid(self, df: DataFrame, raw_col: str, keep_cols: list[str],
+                 prepared: list, groups: dict) -> DataFrame:
+        """Quarantine frame (classifier.py:202-215): a payload is invalid
+        only when NO candidate accepts it. Base-shape candidates judge the
+        original payload in one expression. Exploded-shape candidates
+        (json_path, json_regex_key) judge their extracted records; a
+        payload with an accepted record is carried back by its raw text
+        (validity is a function of the text alone, so the anti-join is
+        exact). Line-exploded CSV groups judge each line individually
+        (parsers.py:705-712 — invalid lines within a matched payload are
+        still bad records); lines whose payload another candidate accepts
+        are excluded. Diagnostics path — the re-derived parses cost ~2
+        evaluations per row, not ~20."""
+        def _valid_any(idxs: list[int], raw: Column) -> Column:
             v = None
-            for schema, p, _, rcol in prepared:
-                if rcol != raw_col:
-                    continue
-                raw = F.col(raw_col)
+            for i in idxs:
+                schema, p = prepared[i][0], prepared[i][1]
                 e = p.valid_expr(schema, raw, p.parse_expr(schema, raw))
                 v = e if v is None else (v | e)
             return v
 
-        invalid_frames: list[DataFrame] = []
-        base_valid = _base_valid_expr()
-        if base_valid is not None:
-            invalid_frames.append(
-                df.filter(~base_valid).select(*keep_cols, F.col(raw_col).alias("raw")))
+        base_valid = None
+        accepted: DataFrame | None = None
+        line_groups: list[tuple[DataFrame, str, list[int]]] = []
+        for (_, rcol), idxs in groups.items():
+            pdf = prepared[idxs[0]][2]
+            if rcol == raw_col:
+                v = _valid_any(idxs, F.col(raw_col))
+                base_valid = v if base_valid is None else (base_valid | v)
+            elif rcol == "_sa_csv_line":
+                line_groups.append((pdf, rcol, idxs))
+            else:
+                ok = pdf.filter(_valid_any(idxs, F.col(rcol))).select(raw_col)
+                accepted = ok if accepted is None else accepted.unionByName(ok)
 
-        seen_line_groups: set[int] = set()
-        for schema, p, pdf, rcol in prepared:
-            if rcol != "_sa_csv_line" or id(pdf) in seen_line_groups:
-                continue
-            seen_line_groups.add(id(pdf))
-            group_invalid = None
-            for s2, p2, pdf2, rcol2 in prepared:
-                if id(pdf2) != id(pdf):
-                    continue
-                line = F.col(rcol)
-                v = p2.valid_expr(s2, line, p2.parse_expr(s2, line))
-                group_invalid = ~v if group_invalid is None else (group_invalid & ~v)
+        def _unaccepted(frame: DataFrame) -> DataFrame:
+            return frame if accepted is None else frame.join(accepted, raw_col, "left_anti")
+
+        invalid_frames: list[DataFrame] = []
+        payloads = df if base_valid is None else df.filter(~base_valid)
+        if base_valid is not None or not line_groups:
+            # with line-shape candidates only, each payload is judged by
+            # its lines below
+            invalid_frames.append(
+                _unaccepted(payloads).select(*keep_cols, F.col(raw_col).alias("raw")))
+        for pdf, rcol, idxs in line_groups:
+            group_invalid = ~_valid_any(idxs, F.col(rcol))
             if base_valid is not None:
                 group_invalid = group_invalid & ~base_valid
             invalid_frames.append(
-                pdf.filter(group_invalid).select(*keep_cols, F.col(rcol).alias("raw")))
+                _unaccepted(pdf.filter(group_invalid))
+                .select(*keep_cols, F.col(rcol).alias("raw")))
 
-        if invalid_frames:
-            invalid = invalid_frames[0]
-            for f in invalid_frames[1:]:
-                invalid = invalid.unionByName(f)
-        else:
-            # no base-shape or line-shape candidates at all (pure
-            # json_path sources): every payload is unjudged -> invalid
-            invalid = df.select(*keep_cols, F.col(raw_col).alias("raw"))
-        return ClassifiedBatch(by_log_type=by_log_type, invalid=invalid)
+        invalid = invalid_frames[0]
+        for f in invalid_frames[1:]:
+            invalid = invalid.unionByName(f)
+        return invalid

@@ -110,6 +110,9 @@ def _condition_col(record: Column, cond: dict | None) -> Column:
 class Normalizer:
     def __init__(self, spec: NormalizationSpec):
         self.spec = spec
+        # record column name -> normalization column, built once: it
+        # references the record by name, so it serves every frame
+        self._columns: dict[str, Column] = {}
 
     def normalization_col(self, record: Column) -> Column:
         """map<string, array<struct<values:array<string>, function:string,
@@ -147,11 +150,14 @@ class Normalizer:
     def apply(self, df: DataFrame, record_col: str = "record",
               record_id: Column | None = None) -> DataFrame:
         """Attach streamalert_normalization + streamalert_record_id."""
+        # built per call: F.uuid() draws its seed when it is built
         rid = record_id if record_id is not None else F.uuid()
-        return (
-            df.withColumn("streamalert_normalization", self.normalization_col(F.col(record_col)))
-            .withColumn("streamalert_record_id", rid.cast("string"))
-        )
+        if record_col not in self._columns:
+            self._columns[record_col] = self.normalization_col(F.col(record_col))
+        return df.withColumns({
+            "streamalert_normalization": self._columns[record_col],
+            "streamalert_record_id": rid.cast("string"),
+        })
 
     @staticmethod
     def values_for_type(df: DataFrame, type_name: str) -> Column:

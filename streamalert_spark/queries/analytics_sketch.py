@@ -729,8 +729,9 @@ def entity_resolution_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     part = read_table(spark, sf_dir, "part")
     names = part.select(F.col("p_name").alias("name")).distinct()
-    # pass `part` (not `names`) so the pair plan is IDENTICAL to
-    # fuzzy_name_pairs' — the cached frame then serves both queries
+    # pass `part` (not `names`): the pair plan is the same as
+    # fuzzy_name_pairs', but op-scoped caches are released at every query's
+    # entry, so each query computes its own pairs
     pairs = edit_distance_pairs(part, "p_name", max_distance=2)
     comp = connected_components(pairs, a_col="n1", b_col="n2",
                                 id_out="name", label_out="canonical")

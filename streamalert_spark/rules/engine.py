@@ -1,23 +1,38 @@
-"""Rules engine: metadata-driven plan construction.
+"""Rules engine: every rule of a log type in one fused pass.
 
 Reference loop (streamalert/rules_engine/rules_engine.py:458-512): for each
 record, find rules for its log type, pre-check req_subkeys, run matchers,
 run the rule body (exceptions -> False, rule.py:160-164), build an Alert.
 
-Spark plan per rule (the 'optimizer' of SURVEY.md §4 — Catalyst cannot push
-into opaque Python, so cheap predicates are emitted natively BEFORE any
-Python runs):
+Spark plan per log type — one pass over the records, whatever the rule
+count (cheap predicates stay native and run BEFORE any Python, the
+'optimizer' of SURVEY.md §4: Catalyst cannot push into opaque Python):
 
-  records(log_type)                       -- routing filter, free
-    .filter(req_subkeys native exprs)     -- rules_engine.py:135-170
-    .filter(matcher native exprs)         -- when the matcher has an expr twin
-    .filter(rule.expr)                    -- native rules: fully JVM-side
-    [.mapInPandas(python body)]           -- only Python-body rules pay this
-    .select(alert columns)
+  records(log_type)
+    .select(_sa_hits = [i for each rule i whose native conditions hold])
+        -- datatypes routing, req_subkeys (rules_engine.py:135-170),
+        -- native matcher twins, rule.expr: one projection, JVM-side
+    .filter(size(_sa_hits) > 0)
+    [.mapInPandas(fused)]   -- only when some rule has Python matchers, a
+                            -- body or dynamic outputs. The record crosses
+                            -- into Python only on rows where one of those
+                            -- rules' native prefilter holds; rows hit only
+                            -- by native rules pass through with their hit
+                            -- array and alert strings. Drops the rules
+                            -- whose Python side fails, attaches dynamic
+                            -- outputs.
+    .posexplode(_sa_hits)   -- one alert row per surviving (record, rule)
+    .select(alert columns)  -- rule metadata from a literal array indexed
+                            -- by rule: name, description, outputs (or the
+                            -- staged / dynamic override), context, merge
+                            -- keys and window
 
-The per-rule frames union into one alerts DataFrame. Union-of-filters over
-one cached scan is a single pass at execution time; rules sharing a log type
-share the scan subplan.
+The engine reads its input once per log type; materializing that input
+(so a micro-batch is scanned and enriched once) is the caller's choice —
+``StreamingPipeline.run_stream_foreach_batch`` persists each micro-batch.
+The rule-dependent columns are built once per engine and log type and
+reused for every frame: building them costs py4j round trips comparable
+to executing a small micro-batch.
 """
 
 from __future__ import annotations
@@ -27,18 +42,23 @@ import json
 import os
 import time
 from collections.abc import Iterator
+from dataclasses import dataclass, field
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from streamalert_spark.alerts.model import alert_columns
+from streamalert_spark.alerts.model import ALERT_TS_FMT, DT_PARTITION_FMT, alert_row, rule_meta_table
 from streamalert_spark.rules.registry import Rule, RuleRegistry
 
 # reference env-var opt-in for the per-rule timing harness
 # (rules_engine.py:67-70, shared/stats.py:26-97)
 TRACK_RULE_STATS_ENV = "STREAMALERT_TRACK_RULE_STATS"
+
+# rules_engine.py:310-338 output format check for dynamic outputs
+_VALID_OUTPUT = "^[a-zA-Z0-9_-]+:\\S+$"
 
 
 def _to_plain(value):
@@ -69,6 +89,7 @@ class RulesEngine:
             else bool(os.environ.get(TRACK_RULE_STATS_ENV))
         )
         self._stat_accs: dict[str, tuple] = {}
+        self._plans: dict[tuple, _LogTypePlan | None] = {}
 
     def _stats_for(self, df: DataFrame, rule_name: str):
         if not self.track_rule_stats:
@@ -106,16 +127,9 @@ class RulesEngine:
     # -- native pre-filters --------------------------------------------------
     def _req_subkeys_filter(self, record: Column, r: Rule) -> Column | None:
         """rules_engine.py:135-170: required nested keys present."""
-        conds = []
-        for parent, subkeys in (r.req_subkeys or {}).items():
-            for sk in subkeys:
-                conds.append(record[parent][sk].isNotNull())
-        if not conds:
-            return None
-        out = conds[0]
-        for c in conds[1:]:
-            out = out & c
-        return out
+        return _all_of([record[parent][sk].isNotNull()
+                        for parent, subkeys in (r.req_subkeys or {}).items()
+                        for sk in subkeys])
 
     def _matcher_filter(self, record: Column, r: Rule) -> tuple[Column | None, list]:
         """Native matcher expressions where available; Python matcher fns
@@ -129,89 +143,84 @@ class RulesEngine:
                 fn = self.registry.matcher_fn(name)
                 if fn is not None:
                     python_matchers.append(fn)
-        cond = None
-        for c in native_conds:
-            cond = c if cond is None else (cond & c)
-        return cond, python_matchers
+        return _all_of(native_conds), python_matchers
 
-    # -- python body evaluation (vectorized) ----------------------------------
+    # -- python side (one Arrow pass for every rule of the log type) -------
     @staticmethod
-    def _python_eval(df: DataFrame, r: Rule, python_matchers: list, record_col: str,
-                     stats=None) -> DataFrame:
-        """Evaluate matchers + rule body per batch via mapInPandas. Exceptions
-        map to False (rule.py:142-164); context is deep-copied per record
-        (rule.py:152-157). ``stats`` is an optional (time_acc, count_acc)
-        accumulator pair timing the rule body (stats.py:35-57)."""
-        process = r.process
-        base_context = r.context
+    def _python_pass(df: DataFrame, evals: list, stats: dict, record_col: str,
+                     carried: list[str]) -> DataFrame:
+        """Run every rule's Python matchers, body and dynamic outputs in one
+        mapInPandas. ``evals[i]`` is (python matchers, body, context,
+        dynamic-output fns) for rule i, or None for a fully native rule.
+        ``record_col`` is null on rows where no Python-side rule hit
+        natively; those rows pass through unchanged, as do the ``carried``
+        string columns. Exceptions map to False (rule.py:142-164) and the
+        context is deep-copied per call (rule.py:152-157). One plain record
+        serves every rule of a row, as in the reference loop. ``stats`` maps
+        a rule index to its (time_acc, count_acc) pair timing the body
+        (stats.py:35-57)."""
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    yield pdf
+        def fired(record, i: int, ms: list, calls: list) -> bool:
+            python_matchers, process, base_context, _ = evals[i]
+            try:
+                for m in python_matchers:
+                    if not m(record):
+                        return False
+                if process is None:
+                    return True
+                ctx = copy.deepcopy(base_context) if base_context is not None else None
+                t0 = time.perf_counter()
+                ok = bool(process(record, ctx)) if ctx is not None else bool(process(record))
+                if i in stats:
+                    ms[i] += (time.perf_counter() - t0) * 1000.0
+                    calls[i] += 1
+                return ok
+            except Exception:  # noqa: BLE001 — rule.py:160-164: never crash
+                return False
+
+        def dynamic(record, i: int) -> list[str]:
+            """rules_engine.py:245-308: each fn gets (record[, context]) and
+            returns str | list | None; a failing fn contributes nothing."""
+            _, _, base_context, fns = evals[i]
+            extra: list[str] = []
+            for fn in fns:
+                try:
+                    got = (fn(record, copy.deepcopy(base_context))
+                           if base_context is not None else fn(record))
+                except Exception:  # noqa: BLE001 — bad fn adds nothing
                     continue
-                keep = []
-                body_ms = 0.0
-                body_calls = 0
-                for rec in pdf[record_col]:
-                    record = _to_plain(rec)
-                    ok = True
-                    try:
-                        for m in python_matchers:
-                            if not m(record):
-                                ok = False
-                                break
-                        if ok and process is not None:
-                            ctx = copy.deepcopy(base_context) if base_context is not None else None
-                            t0 = time.perf_counter() if stats else 0.0
-                            ok = bool(process(record, ctx)) if ctx is not None else bool(process(record))
-                            if stats:
-                                body_ms += (time.perf_counter() - t0) * 1000.0
-                                body_calls += 1
-                    except Exception:  # noqa: BLE001 — rule.py:160-164: never crash
-                        ok = False
-                    keep.append(ok)
-                if stats and body_calls:
-                    stats[0].add(body_ms)
-                    stats[1].add(body_calls)
-                yield pdf[pd.Series(keep, index=pdf.index)]
-
-        return df.mapInPandas(run, schema=df.schema)
-
-    # -- dynamic outputs -------------------------------------------------------
-    @staticmethod
-    def _dynamic_outputs_eval(df: DataFrame, r: Rule, record_col: str) -> DataFrame:
-        """Evaluate dynamic-output functions per record and attach a
-        '_dynamic_outputs' array column (rules_engine.py:245-308: each
-        function gets (record[, context]) and returns str | list | None;
-        failures contribute nothing)."""
-        fns = r.dynamic_outputs
-        base_context = r.context
+                if isinstance(got, str):
+                    extra.append(got)
+                elif isinstance(got, (list, tuple)):
+                    extra.extend(str(g) for g in got if g)
+            return extra
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                outs = []
-                for rec in pdf[record_col]:
+                ms = [0.0] * len(evals)
+                calls = [0] * len(evals)
+                hits_out, dyn_out = [], []
+                for rec, hits in zip(pdf[record_col], pdf["_sa_hits"]):
+                    hits = [int(i) for i in hits]
+                    if rec is None:
+                        hits_out.append(hits)
+                        dyn_out.append([[] for _ in hits])
+                        continue
                     record = _to_plain(rec)
-                    extra: list[str] = []
-                    for fn in fns:
-                        try:
-                            got = (fn(record, copy.deepcopy(base_context))
-                                   if base_context is not None else fn(record))
-                        except Exception:  # noqa: BLE001 — bad fn adds nothing
-                            continue
-                        if isinstance(got, str):
-                            extra.append(got)
-                        elif isinstance(got, (list, tuple)):
-                            extra.extend(str(g) for g in got if g)
-                    outs.append(extra)
-                yield pdf.assign(_dynamic_outputs=outs)
-
-        from pyspark.sql import types as T
+                    kept = [i for i in hits if evals[i] is None or fired(record, i, ms, calls)]
+                    hits_out.append(kept)
+                    dyn_out.append([dynamic(record, i) if evals[i] is not None and evals[i][3]
+                                    else [] for i in kept])
+                for i, (t_acc, c_acc) in stats.items():
+                    if calls[i]:
+                        t_acc.add(ms[i])
+                        c_acc.add(calls[i])
+                yield pdf.drop(columns=[record_col]).assign(_sa_hits=hits_out, _sa_dyn=dyn_out)
 
         schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField("_dynamic_outputs", T.ArrayType(T.StringType()))]
+            [T.StructField(c, T.StringType()) for c in carried]
+            + [T.StructField("_sa_hits", T.ArrayType(T.IntegerType())),
+               T.StructField("_sa_dyn", T.ArrayType(T.ArrayType(T.StringType())))]
         )
         return df.mapInPandas(run, schema=schema)
 
@@ -236,22 +245,75 @@ class RulesEngine:
         (rules_engine.py:219-243): a staged rule's alerts carry
         staged=true and are routed ONLY to the required outputs.
         """
-        rules = self.registry.rules_for_log_type(log_type)
-        record = F.col(record_col)
+        plan = self._plan(df, log_type, record_col, staged_rules, required_outputs)
+        if plan is None:
+            return None
         ts = event_time if event_time is not None else F.current_timestamp()
+        carried = [
+            F.to_json(F.col(record_col)).alias("_sa_record"),
+            F.date_format(ts, ALERT_TS_FMT).alias("_sa_created"),
+            F.date_format(ts, DT_PARTITION_FMT).alias("_sa_dt"),
+        ]
+        if alert_id is not None:
+            carried.append(alert_id.cast("string").alias("_sa_id"))
 
-        alert_frames: list[DataFrame] = []
+        # 1. one projection: the indexes of the rules whose native side holds
+        cur = df.select(F.col(record_col).alias("_sa_rec"), plan.hits.alias("_sa_hits"),
+                        *carried).filter(F.size("_sa_hits") > 0)
+        # 2. one Arrow pass for every Python matcher, body and dynamic output
+        if plan.evals is not None:
+            cur = cur.withColumn("_sa_rec", plan.python_rec)
+            cur = self._python_pass(cur, plan.evals, plan.stats, "_sa_rec",
+                                    ["_sa_record", "_sa_created", "_sa_dt"]
+                                    + (["_sa_id"] if alert_id is not None else []))
+        else:
+            cur = cur.drop("_sa_rec")
+        # 3. one explode: an alert row per surviving (record, rule)
+        cur = cur.select("*", F.posexplode("_sa_hits").alias("_sa_pos", "_sa_rule"))
+        key = (cluster, source_service, source_entity, log_type)
+        if key not in plan.rows:
+            plan.rows[key] = alert_row(
+                plan.meta,
+                F.col("_sa_record"),
+                F.col("_sa_created"),
+                F.col("_sa_dt"),
+                cluster=cluster,
+                source_service=source_service,
+                source_entity=source_entity,
+                log_type=log_type,
+                alert_id=F.col("_sa_id"),
+                outputs=plan.outputs,
+            )
+        # the id is built per call: F.uuid() draws its seed when it is built
+        aid = F.col("_sa_id") if alert_id is not None else F.uuid()
+        return cur.select(aid.cast("string").alias("id"), *plan.rows[key][1:])
+
+    def _plan(self, df: DataFrame, log_type: str, record_col: str,
+              staged_rules: dict[str, bool] | None,
+              required_outputs: list[str] | None) -> _LogTypePlan | None:
+        """The rule-dependent columns of one log type's pass, built once per
+        engine and reused for every frame (micro-batch) with the same shape:
+        they reference columns by name only. Rules are read as they stand
+        when first planned."""
+        rules = self.registry.rules_for_log_type(log_type)
+        has_norm = "streamalert_normalization" in df.columns
+        key = (log_type, record_col, has_norm, tuple(id(r) for r in rules),
+               tuple(sorted((staged_rules or {}).items())), tuple(required_outputs or ()))
+        if key in self._plans:
+            return self._plans[key]
+        record = F.col(record_col)
+        picked: list[tuple[Rule, Column | None, list, bool]] = []
         for r in rules:
-            cur = df
+            conds: list[Column] = []
             if r.datatypes:
                 # datatype routing (rule.py:227-229, docs/rules.rst:174-179):
                 # the record's normalization must contain at least one
                 # subscribed normalized type. Without a normalization column
                 # a datatype-routed rule can never match.
-                if "streamalert_normalization" not in df.columns:
+                if not has_norm:
                     continue
                 norm = F.col("streamalert_normalization")
-                cond = None
+                routed = None
                 for dt_name in r.datatypes:
                     # the map carries every CONFIGURED type (empty values
                     # when its condition failed) — presence means actual
@@ -259,60 +321,85 @@ class RulesEngine:
                     c = F.size(F.flatten(
                         F.transform(norm[dt_name], lambda e: e["values"])
                     )) > 0
-                    cond = c if cond is None else (cond | c)
-                cur = cur.filter(cond)
+                    routed = c if routed is None else (routed | c)
+                conds.append(routed)
             pre = self._req_subkeys_filter(record, r)
             if pre is not None:
-                cur = cur.filter(pre)
+                conds.append(pre)
             mcond, python_matchers = self._matcher_filter(record, r)
             if mcond is not None:
-                cur = cur.filter(mcond)
+                conds.append(mcond)
             if r.expr is not None:
-                cur = cur.filter(r.expr(record))
-            if r.process is not None or python_matchers:
-                cur = self._python_eval(cur, r, python_matchers, record_col,
-                                        stats=self._stats_for(cur, r.name))
+                conds.append(r.expr(record))
             staged = bool((staged_rules or {}).get(r.name, False))
-            outputs_override = None
-            if staged:
-                # staging gate: only the required outputs receive staged
-                # alerts (rules_engine.py:219-243)
-                outputs_override = F.array(
-                    *[F.lit(o) for o in (required_outputs or [])]
-                ).cast("array<string>")
-            elif r.dynamic_outputs:
-                cur = self._dynamic_outputs_eval(cur, r, record_col)
-                # merge static + dynamic, keep only valid 'service:descriptor'
-                # outputs (rules_engine.py:310-338 format check)
-                outputs_override = F.array_distinct(F.concat(
-                    F.array(*[F.lit(o) for o in r.outputs]).cast("array<string>"),
-                    F.filter(
-                        F.coalesce(F.col("_dynamic_outputs"), F.array().cast("array<string>")),
-                        lambda o: o.rlike("^[a-zA-Z0-9_-]+:\\S+$"),
-                    ),
-                ))
-            alert_frames.append(
-                cur.select(
-                    *alert_columns(
-                        r,
-                        record_json=F.to_json(record),
-                        event_time=ts,
-                        cluster=cluster,
-                        source_service=source_service,
-                        source_entity=source_entity,
-                        log_type=log_type,
-                        alert_id=alert_id,
-                        staged=staged,
-                        outputs_override=outputs_override,
-                    )
-                )
-            )
-        if not alert_frames:
+            picked.append((r, _all_of(conds), python_matchers, staged))
+        if not picked:
+            self._plans[key] = None
             return None
-        out = alert_frames[0]
-        for f_ in alert_frames[1:]:
-            out = out.unionByName(f_)
-        return out
+
+        hits = F.array_compact(F.array(*[
+            F.lit(i) if native is None else F.when(native, F.lit(i))
+            for i, (_, native, _, _) in enumerate(picked)
+        ]))
+        # staging gate: only the required outputs receive staged alerts
+        # (rules_engine.py:219-243), and dynamic outputs never apply to them
+        dynamic = [i for i, (r, _, _, staged) in enumerate(picked)
+                   if r.dynamic_outputs and not staged]
+        evals = [
+            (python_matchers, r.process, r.context,
+             r.dynamic_outputs if i in dynamic else [])
+            if (python_matchers or r.process is not None or i in dynamic) else None
+            for i, (r, _, python_matchers, _) in enumerate(picked)
+        ]
+        py_idx = [i for i, e in enumerate(evals) if e is not None]
+        # timed like the reference's body timer: rules with a body or
+        # Python matchers (stats.py:35-57)
+        stats = {i: self._stats_for(df, r.name) for i, (r, _, python_matchers, _) in enumerate(picked)
+                 if self.track_rule_stats and (python_matchers or r.process is not None)}
+        meta = rule_meta_table([
+            (r, staged, (required_outputs or []) if staged else None)
+            for r, _, _, staged in picked
+        ])[F.col("_sa_rule")]
+        outputs = None
+        if dynamic:
+            # merge static + dynamic, keep only valid 'service:descriptor'
+            # outputs (rules_engine.py:310-338 format check)
+            outputs = F.when(F.col("_sa_rule").isin(dynamic), F.array_distinct(F.concat(
+                meta["outputs"],
+                F.filter(F.col("_sa_dyn")[F.col("_sa_pos")], lambda o: o.rlike(_VALID_OUTPUT)),
+            ))).otherwise(meta["outputs"])
+        plan = _LogTypePlan(
+            hits=hits,
+            evals=evals if py_idx else None,
+            python_rec=(F.when(F.exists("_sa_hits", lambda h: h.isin(py_idx)), F.col("_sa_rec"))
+                        if py_idx else None),
+            stats=stats,
+            meta=meta,
+            outputs=outputs,
+        )
+        self._plans[key] = plan
+        return plan
+
+
+@dataclass
+class _LogTypePlan:
+    """The rule-dependent columns of one log type's fused pass."""
+
+    hits: Column                   # array of the rules whose native side holds
+    evals: list | None             # per rule: Python side, or None when native;
+                                   # None throughout: no Python pass
+    python_rec: Column | None      # the record where a Python-side rule hit
+    stats: dict                    # rule index -> (time_acc, count_acc)
+    meta: Column                   # metadata struct of the row's _sa_rule
+    outputs: Column | None         # outputs with dynamic outputs merged in
+    rows: dict = field(default_factory=dict)   # alert_row projections by source
+
+
+def _all_of(conds: list[Column]) -> Column | None:
+    out = None
+    for c in conds:
+        out = c if out is None else (out & c)
+    return out
 
 
 def record_to_dict(record_json: str) -> dict:

@@ -12,17 +12,29 @@ alerts table).
     source (file/kafka/rate) with columns (value, service, resource)
       -> classify per (service, resource) route      [§2.2 projections]
       -> normalize + record ids                      [§2.3 projection]
-      -> rules -> alert rows                         [§2.4 union of filters]
+      -> IOC annotate (broadcast join, per batch)    [§2.3 join]
+      -> rules: per log type one native hit-array
+         projection, one mapInPandas for every
+         Python rule, one explode to alert rows      [§2.4 fused pass]
+      -> log types unioned into one alerts frame
       -> sinks: alerts parquet, historical store, dispatch foreachBatch
       -> optional: streaming_merge for merge-configured rules
+
+Materialization happens only in ``run_stream_foreach_batch``: the
+micro-batch is persisted once, so every log type's branch reads the same
+scan, and each log type's normalized frame is persisted before IOC
+annotation, so its uuid record ids are drawn once and the annotation's
+self-join reads them from the cache. Both are released after the batch's
+write. ``build_alerts`` and ``run_stream`` build the same plan without the
+persists (a streaming source cannot be persisted).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from streamalert_spark.classify.classifier import Classifier
 from streamalert_spark.enrich.threat_intel import ThreatIntel
@@ -42,6 +54,16 @@ class StreamingPipeline:
     # expressions can reference (F.col('streamalert_ioc'))
     threat_intel: ThreatIntel | None = None
     cluster: str = ""
+
+    # one classifier and one engine per pipeline: the columns they build
+    # reference columns by name only, so every micro-batch reuses them
+    @cached_property
+    def _classifier(self) -> Classifier:
+        return Classifier(self.schemas)
+
+    @cached_property
+    def _engine(self) -> RulesEngine:
+        return RulesEngine(self.rules)
 
     def build_alerts(
         self,
@@ -65,17 +87,36 @@ class StreamingPipeline:
             raise ValueError(
                 "threat_intel annotation on a streaming source must run "
                 "per micro-batch — use run_stream_foreach_batch()")
-        clf = Classifier(self.schemas)
-        batch = clf.classify(source, raw_col=raw_col, service=service, resource=resource)
-        engine = RulesEngine(self.rules)
+        return self._alerts(source, service, resource, raw_col, event_time)
+
+    def _alerts(
+        self,
+        source: DataFrame,
+        service: str,
+        resource: str,
+        raw_col: str = "value",
+        event_time: Column | None = None,
+        held: list[DataFrame] | None = None,
+    ) -> DataFrame | None:
+        """The alerts plan. With ``held``, each normalized frame that feeds
+        IOC annotation is persisted and appended to ``held`` for the caller
+        to release."""
+        batch = self._classifier.classify(
+            source, raw_col=raw_col, service=service, resource=resource)
+        engine = self._engine
 
         alert_frames = []
         for log_type, df in batch.by_log_type.items():
+            if not self.rules.rules_for_log_type(log_type):
+                continue
             cur = df
             normalizer = (self.normalizers or {}).get(log_type)
             if normalizer is not None:
                 cur = normalizer.apply(cur)
                 if self.threat_intel is not None:
+                    if held is not None:
+                        cur = cur.persist()
+                        held.append(cur)
                     cur = self.threat_intel.annotate(cur)
             alerts = engine.run(
                 cur,
@@ -158,10 +199,17 @@ class StreamingPipeline:
         )
 
         def process(batch_df, batch_id: int) -> None:
-            alerts = self.build_alerts(batch_df, service=service, resource=resource)
-            if alerts is not None:
-                alerts.write.mode("overwrite").parquet(
-                    f"{alerts_path}/_sa_batch={batch_id}")
+            # one scan of the micro-batch and one normalization per log type
+            # serve every branch of the plan; released after the write
+            held = [batch_df.persist()]
+            try:
+                alerts = self._alerts(batch_df, service, resource, held=held)
+                if alerts is not None:
+                    alerts.write.mode("overwrite").parquet(
+                        f"{alerts_path}/_sa_batch={batch_id}")
+            finally:
+                for df in held:
+                    df.unpersist()
 
         writer = (
             src.writeStream.foreachBatch(process)

@@ -3,6 +3,7 @@ from __future__ import annotations
 import glob
 import os
 import re
+import subprocess
 
 import pytest
 
@@ -23,14 +24,29 @@ heavy = pytest.mark.skipif(
     reason="heavyweight builder-rotation check; set SPARK_GRAFT_HEAVY=1")
 
 
+def _correctness_records() -> list[str]:
+    """Committed CORRECTNESS_r*.json names (``git ls-files``), so an
+    untracked local record cannot shift the cohort; the directory glob
+    outside a git checkout."""
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    try:
+        out = subprocess.run(
+            ["git", "ls-files", "CORRECTNESS_r*.json"], cwd=here,
+            capture_output=True, text=True, timeout=30, check=True)
+        if out.stdout.split():
+            return out.stdout.split()
+    except (OSError, subprocess.SubprocessError):
+        pass
+    return glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
+
+
 def next_round_no() -> int:
     """1 + the newest committed CORRECTNESS_r*.json round number — the
     round currently being built. Deterministic within a round, bumps when
     the driver commits the round record, so default cohorts rotate round
     over round and cover their full population every k rounds."""
     best = 0
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+    for path in _correctness_records():
         m = re.search(r"CORRECTNESS_r0*(\d+)\.json$", path)
         if m:
             best = max(best, int(m.group(1)))

@@ -391,6 +391,31 @@ def test_json_path_dotted_tail(spark):
     assert got == ["x", "y"]
 
 
+@pytest.mark.parametrize("envelope_cfg, env_payload", [
+    ({"json_path": "records[*]"}, '{"host": "h1", "records": [{"a": "x"}]}'),
+    ({"json_regex_key": "message"}, '{"host": "h1", "message": "ghe: {\\"a\\": \\"x\\"}"}'),
+], ids=["json_path", "json_regex_key"])
+def test_invalid_only_when_no_candidate_accepts(spark, envelope_cfg, env_payload):
+    """classifier.py:202-215 — a payload is quarantined only when no
+    candidate schema accepts it, including envelope schemas whose records
+    are extracted from the payload (json_path / json_regex_key)."""
+    reg = SchemaRegistry()
+    reg.register(LogSchema(
+        name="t:env", schema={"a": "string"},
+        configuration={"envelope_keys": {"host": "string"}, **envelope_cfg},
+    ))
+    reg.register(LogSchema(name="t:base", schema={"b": "integer"}))
+    payloads = [env_payload, '{"b": 5}', '{"c": 1}']
+    df = spark.createDataFrame([(p,) for p in payloads], "value string")
+    batch = Classifier(reg).classify(df, raw_col="value")
+    env_rows = batch.by_log_type["t:env"].collect()
+    assert [r["record"]["a"] for r in env_rows] == ["x"]
+    assert env_rows[0]["streamalert_envelope_keys"]["host"] == "h1"
+    assert batch.by_log_type["t:base"].count() == 1
+    assert batch.invalid.count() == 1
+    assert [r["raw"] for r in batch.invalid.collect()] == ['{"c": 1}']
+
+
 def test_csv_escapechar_boundary_split(spark):
     """With a configured escapechar (csv.reader parity): escaped quotes
     don't flip the quote parity, an escaped newline is literal (stays in

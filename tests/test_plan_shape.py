@@ -31,6 +31,24 @@ def test_classifier_parses_once(spark):
     assert plan.count("from_csv") == 1, plan
 
 
+def test_rules_one_python_pass_no_union(spark):
+    """Every rule of a log type evaluates in one fused pass: one
+    MapInPandas for all Python bodies, no per-rule branch to union."""
+    from streamalert_spark.rules.engine import RulesEngine
+    from streamalert_spark.rules.registry import Rule, RuleRegistry
+
+    reg = RuleRegistry()
+    for i in range(3):
+        reg.add(Rule(name=f"py{i}", process=lambda r, i=i: r["n"] > i, logs=["t:x"]))
+    reg.add(Rule(name="dyn", expr=lambda rec: rec["n"] > 0, logs=["t:x"],
+                 dynamic_outputs=[lambda r: "slack:x"]))
+    reg.add(Rule(name="native", expr=lambda rec: rec["n"] > 1, logs=["t:x"]))
+    df = spark.createDataFrame([((i,),) for i in range(4)], "record struct<n: bigint>")
+    plan = _plan(RulesEngine(reg).run(df, log_type="t:x"))
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Union" not in plan, plan
+
+
 def test_threat_intel_is_broadcast_join(spark):
     from streamalert_spark.queries import load_all
 

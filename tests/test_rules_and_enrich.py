@@ -298,3 +298,79 @@ def test_rule_description_parser():
 
     # http: line is a value continuation, never a field label
     assert "http" not in parse("description: x\nhttps://e.com/a: b")
+
+
+# ------------------------------------------------------------- fused pass
+
+def test_raising_body_fails_only_its_rule(spark):
+    """rule.py:160-164 in the fused pass: a body that raises fails that
+    rule for that record only; another Python rule on the same record
+    still alerts, and the raising rule still alerts on other records."""
+    reg = RuleRegistry()
+
+    @reg.rule(logs=["t:x"], outputs=["slack:x"])
+    def raises_on_a(record):
+        if record["name"] == "a":
+            raise KeyError("boom")
+        return True
+
+    @reg.rule(logs=["t:x"], outputs=["slack:x"])
+    def always(record):
+        return record["n"] >= 0
+
+    df = _records_df(spark, [("a", 1, ("k",)), ("b", 2, ("k",))])
+    alerts = RulesEngine(reg).run(df, log_type="t:x", event_time=F.col("ts"))
+    got = sorted((r["rule_name"], '"name":"a"' in r["record"]) for r in alerts.collect())
+    assert got == [("always", False), ("always", True), ("raises_on_a", False)]
+
+
+def test_staged_and_dynamic_rules_share_a_log_type(spark):
+    """The literal metadata table keeps each rule's own outputs: the staged
+    rule reaches only the required outputs, the dynamic one merges its
+    static and dynamic outputs, a plain rule keeps its static ones."""
+    reg = RuleRegistry()
+    reg.add(Rule(name="staged", process=lambda r: True, logs=["t:x"],
+                 outputs=["slack:prod"], dynamic_outputs=[lambda r: "pagerduty:x"]))
+    reg.add(Rule(name="dyn", process=lambda r: r["n"] > 1, logs=["t:x"],
+                 outputs=["s3:archive"],
+                 dynamic_outputs=[lambda r: f"slack:{r['name']}"]))
+    reg.add(Rule(name="plain", expr=lambda r: F.lit(True), logs=["t:x"],
+                 outputs=["slack:plain"]))
+    df = _records_df(spark, [("a", 1, ("k",)), ("b", 2, ("k",))])
+    alerts = RulesEngine(reg).run(
+        df, log_type="t:x", event_time=F.col("ts"),
+        staged_rules={"staged": True}, required_outputs=["firehose:alerts"])
+    got = sorted(
+        (r["rule_name"], '"name":"b"' in r["record"], tuple(r["outputs"]), r["staged"])
+        for r in alerts.collect())
+    assert got == [
+        ("dyn", True, ("s3:archive", "slack:b"), False),
+        ("plain", False, ("slack:plain",), False),
+        ("plain", True, ("slack:plain",), False),
+        ("staged", False, ("firehose:alerts",), True),
+        ("staged", True, ("firehose:alerts",), True),
+    ]
+
+
+def test_rule_stats_count_rows_that_reach_the_body(spark):
+    """stats.py:26-97 in the fused pass: per-rule ``calls`` is the number
+    of records that pass the rule's native prefilter and Python matchers,
+    i.e. the records its body runs on."""
+    reg = RuleRegistry()
+    reg.matcher(lambda r: r["n"] % 2 == 0, name="even")
+    reg.add(Rule(name="gated", process=lambda r: r["n"] > 3, logs=["t:x"],
+                 matchers=["even"], expr=lambda rec: rec["n"] < 8))
+    reg.add(Rule(name="ungated", process=lambda r: True, logs=["t:x"]))
+    reg.add(Rule(name="native_only", expr=lambda rec: rec["n"] > 5, logs=["t:x"]))
+    df = _records_df(spark, [(str(i), i, ("k",)) for i in range(10)])
+    engine = RulesEngine(reg, track_rule_stats=True)
+    alerts = engine.run(df, log_type="t:x", event_time=F.col("ts"))
+    by_rule: dict[str, int] = {}
+    for r in alerts.collect():
+        by_rule[r["rule_name"]] = by_rule.get(r["rule_name"], 0) + 1
+    assert by_rule == {"gated": 2, "ungated": 10, "native_only": 4}
+    stats = engine.rule_stats()
+    assert set(stats) == {"gated", "ungated"}
+    assert stats["gated"]["calls"] == 4        # n in {0, 2, 4, 6}
+    assert stats["ungated"]["calls"] == 10
+    assert all(s["ms"] >= 0.0 for s in stats.values())

@@ -3,7 +3,8 @@ measured scaling table in SCALE.md. If the generator silently broke an
 invariant (dangling foreign keys, a stretched time window, cross-replica
 token collisions), the measured ratios would test the wrong distribution
 and the SCALE.md claims would rot. Runs at --mult 2 on sf0.001 so it's
-cheap enough for every pytest run."""
+cheap enough for every pytest run. Also pins tools/conf_ab.py's --conf
+parsing."""
 
 from __future__ import annotations
 
@@ -91,3 +92,15 @@ def test_document_replicas_use_disjoint_token_spaces(scaled_dir):
         f"SELECT COUNT(*) FROM '{scaled_dir}/documents.parquet' "
         f"WHERE n_chars <> length(text)").fetchone()
     assert bad == 0
+
+
+def test_conf_ab_rejects_comma_joined_confs():
+    """conf_ab takes one key=value per --conf; the retired comma-joined form
+    must fail loudly instead of passing {'a': '1,b=2'} to Spark."""
+    from conf_ab import parse_conf
+
+    assert parse_conf(["spark.a=1", "spark.executor.extraJavaOptions=-Dx=1,-Dy=2"]) == {
+        "spark.a": "1", "spark.executor.extraJavaOptions": "-Dx=1,-Dy=2"}
+    for bad in (["a=1,b=2"], ["spark.a=1, spark.b=2"], ["no_equals"]):
+        with pytest.raises(ValueError):
+            parse_conf(bad)

@@ -886,6 +886,73 @@ def test_streaming_threat_intel_stream_static_join(spark, tmp_path):
     assert json.loads(rows[0]["record"])["event_id"] == "e1"
 
 
+def test_foreach_batch_reads_each_line_once_and_matches_batch(spark, tmp_path):
+    """run_stream_foreach_batch persists the micro-batch and each
+    normalized frame: a K-line file is scanned once (sum of numInputRows ==
+    K) although several log types, Python rules and the IOC self-join
+    read it, and its alerts equal build_alerts over a batch read."""
+    from collections import Counter
+
+    from streamalert_spark.enrich.threat_intel import ThreatIntel
+
+    schemas = SchemaRegistry()
+    schemas.register(LogSchema(
+        name="app:conn", schema={"event_id": "string", "src": "string"}))
+    schemas.register(LogSchema(
+        name="app:auth", schema={"user": "string", "ok": "boolean"}))
+    rules = RuleRegistry()
+    rules.add(Rule(
+        name="ioc_hit", logs=["app:conn"], outputs=["slack:alerts"],
+        expr=lambda rec: F.col("streamalert_ioc").isNotNull()))
+    rules.add(Rule(name="odd_event", logs=["app:conn"], outputs=["slack:alerts"],
+                   process=lambda r: int(r["event_id"][1:]) % 2 == 1))
+    rules.add(Rule(name="raises", logs=["app:conn"], outputs=["slack:alerts"],
+                   process=lambda r: r["missing"]))
+    rules.add(Rule(name="failed_login", logs=["app:auth"], outputs=["slack:alerts"],
+                   process=lambda r: not r["ok"]))
+    rules.add(Rule(name="root_user", logs=["app:auth"], outputs=["slack:alerts"],
+                   expr=lambda rec: rec["user"] == "root"))
+    ioc = spark.createDataFrame(
+        [("1.2.3.4", "mal_ip")], "ioc_value string, sub_type string")
+    pipeline = StreamingPipeline(
+        schemas=schemas, rules=rules,
+        normalizers={"app:conn": Normalizer(NormalizationSpec(types={
+            "ip_address": [PathSpec(path="src")],
+        }))},
+        threat_intel=ThreatIntel(ioc, {"ip": ["ip_address"]}),
+        cluster="test",
+    )
+
+    src_dir = tmp_path / "once_src"
+    src_dir.mkdir()
+    lines = (
+        [{"event_id": f"e{i}", "src": "1.2.3.4" if i % 3 == 0 else "8.8.8.8"}
+         for i in range(6)]
+        + [{"user": u, "ok": ok} for u, ok in
+           [("root", True), ("bob", False), ("root", False), ("amy", True)]]
+        + [{"unrelated": "shape"}]
+    )
+    with open(src_dir / "b1.jsonl", "w") as fh:
+        fh.write("".join(json.dumps(x) + "\n" for x in lines))
+
+    q = pipeline.run_stream_foreach_batch(
+        spark, str(src_dir), str(tmp_path / "once_ckpt"), str(tmp_path / "once_alerts"),
+        service="kinesis", resource="s1", available_now=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(lines)
+
+    def multiset(df):
+        return Counter((r["rule_name"], r["record"]) for r in df.collect())
+
+    streamed = multiset(spark.read.parquet(str(tmp_path / "once_alerts")))
+    batch = multiset(pipeline.build_alerts(
+        spark.read.text(str(src_dir)), service="kinesis", resource="s1"))
+    assert streamed == batch
+    assert Counter(rule for rule, _ in streamed.elements()) == Counter(
+        {"ioc_hit": 2, "odd_event": 3, "failed_login": 2, "root_user": 2})
+
+
 def test_late_data_drop_accounting(spark, tmp_path):
     """The stream_late_data_bounded scenario's drop count, pinned via
     the engine's own numRowsDroppedByWatermark metric: exactly the two

@@ -4,8 +4,8 @@ passes within each session, min per query — then print per-query and
 total deltas. Used in round 12 to adjudicate guide-§9 join/codec confs
 honestly before adopting them as session defaults.
 
-Usage: python tools/conf_ab.py --conf k=v[,k=v...] [--names a,b] [--top N]
-       [--passes 2]
+Usage: python tools/conf_ab.py --conf k=v [--conf k=v ...] [--names a,b]
+       [--top N] [--passes 2]
 """
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -50,6 +51,28 @@ def run_set(names, extra_conf, passes, sf_dir):
     return mins
 
 
+# the retired comma-joined form `--conf a=1,b=2`: a comma followed by
+# another conf key and '=' (JVM flag lists such as `-Dx=1,-Dy=2` pass)
+_LEGACY_CONF = re.compile(r",\s*[A-Za-z_][\w.-]*=")
+
+
+def parse_conf(items: list[str]) -> dict[str, str]:
+    """Repeated ``--conf key=value`` flags -> conf dict. Raises
+    ValueError on an item without '=' and on the comma-joined form, which
+    would otherwise pass ``{'a': '1,b=2'}`` to Spark as one value."""
+    conf = {}
+    for kv in items:
+        if "=" not in kv:
+            raise ValueError(f"--conf {kv!r}: expected key=value")
+        if _LEGACY_CONF.search(kv):
+            raise ValueError(
+                f"--conf {kv!r}: comma-joined confs are not supported; "
+                "repeat --conf once per key=value")
+        key, value = kv.split("=", 1)
+        conf[key] = value
+    return conf
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--conf", required=True, action="append",
@@ -64,7 +87,10 @@ def main() -> None:
     names = [n for n in args.names.split(",") if n]
     if args.top:
         names += [n for n in _top_names(args.top) if n not in names]
-    conf = dict(kv.split("=", 1) for kv in args.conf)
+    try:
+        conf = parse_conf(args.conf)
+    except ValueError as exc:
+        ap.error(str(exc))
 
     # ALTERNATE sessions per config (base, cand, base, cand) and take the
     # min per query per config across its sessions: a minutes-long host
