@@ -12,14 +12,17 @@ Reference semantics:
   subset of all records minus merge keys), and per-alert ValueDiffs
   (shared/alert.py:289-433).
 
-This module has the pure-Python synthesis functions (unit-testable, ported
-semantics not code) and the batch grouping operator as applyInPandas keyed
-by (rule_name, merge key values). The streaming variant with event-time
-timeouts lives in streamalert_spark.streaming.merge.
+Every merge path is built from three pieces here: ``with_merge_values``
+(the key column), ``greedy_groups`` (the grouping) and ``merged_rows``
+(synthesis into MERGED_SCHEMA rows). ``merge_alerts_batch`` runs them
+once over every key's alerts; the streaming merger
+(streamalert_spark.streaming.merge) runs the same three on each key's
+buffered alerts and emits only the groups that are due, so batch and
+stream give the same groups by construction.
 
-Scale: state per key is bounded (<=50 alerts by the cap); the shuffle is on
-(rule_name, merge keys) which is exactly the reference's DynamoDB access
-pattern re-expressed as a partitioned groupBy.
+Scale: the batch shuffle is on (rule_name, merge keys), which is exactly
+the reference's DynamoDB access pattern re-expressed as a partitioned
+groupBy.
 """
 
 from __future__ import annotations
@@ -128,7 +131,8 @@ def greedy_groups(
 ) -> list[list[int]]:
     """Greedy chronological grouping (alert_merger/main.py:106-132): walk
     alerts oldest-first; an alert joins the current group while it is within
-    the group's OLDEST alert's window and the group is under the cap."""
+    the group's OLDEST alert's window and the group is under the cap. Groups
+    list members oldest-first; ``merged_rows`` and the stream rely on it."""
     order = sorted(range(len(created)), key=lambda i: created[i])
     groups: list[list[int]] = []
     cur: list[int] = []
@@ -150,57 +154,67 @@ MERGED_SCHEMA = (
     "rule_name string, merge_values string, alert_count bigint, "
     "alert_time_first string, alert_time_last string, merged_record string"
 )
+MERGED_COLUMNS = [c.split()[0] for c in MERGED_SCHEMA.split(", ")]
+
+
+def with_merge_values(alerts: DataFrame) -> DataFrame:
+    """Add the merge key column: ``merge_values`` is the JSON map of each
+    merge_by_keys key to its record value. The values come from a single
+    from_json pass (get_json_object needs a foldable path, but merge keys
+    live in a per-row array)."""
+    rec_map = F.from_json(F.col("record"), "map<string,string>")
+    return alerts.withColumn(
+        "merge_values",
+        F.to_json(F.map_from_arrays(
+            F.col("merge_by_keys"),
+            F.transform(F.col("merge_by_keys"), lambda k: rec_map[k]),
+        )),
+    )
+
+
+def parse_created(createds: list[str]) -> list[datetime]:
+    return [datetime.strptime(c, ALERT_TS_PY_FMT) for c in createds]
+
+
+def merged_rows(rule_name: str, merge_values: str, merge_keys: list[str],
+                createds: list[str], records: list[str],
+                groups: list[list[int]]) -> list[tuple]:
+    """One MERGED_SCHEMA row per ``greedy_groups`` group of alert indices
+    (oldest-first) through ``synthesize_merged``. ``merge_keys`` may
+    be the numpy array a pandas batch holds, so no truth test on it."""
+    merge_keys = [] if merge_keys is None else list(merge_keys)
+    rows = []
+    for group in groups:
+        members = [{"created": createds[i], "record": json.loads(records[i] or "{}")}
+                   for i in group]
+        merged = synthesize_merged(members, merge_keys)
+        rows.append((
+            rule_name, merge_values, merged["AlertCount"],
+            merged["AlertTimeFirst"], merged["AlertTimeLast"],
+            json.dumps(merged, sort_keys=True),
+        ))
+    return rows
 
 
 def merge_alerts_batch(alerts: DataFrame, generator_limit: int | None = None) -> DataFrame:
     """Batch merge over an alerts DataFrame (columns per ALERT_SCHEMA).
 
-    groupBy (rule_name, merge key values) -> applyInPandas running the
-    greedy grouping + synthesis. Alerts without merge config pass through
-    as singleton groups downstream (reference dispatches them immediately,
-    main.py:163-191) — callers should pre-filter on merge_window_mins > 0.
-    ``generator_limit`` applies the reference's per-rule per-pass cap
-    (cap_alerts_per_rule); None processes the whole batch in one pass.
+    groupBy (rule_name, merge key values), then every key's alerts go
+    through ``greedy_groups`` and ``merged_rows``. Alerts without merge
+    config pass through as singleton groups downstream (reference
+    dispatches them immediately, main.py:163-191) — callers should
+    pre-filter on merge_window_mins > 0. ``generator_limit`` applies the
+    reference's per-rule per-pass cap (cap_alerts_per_rule); None
+    processes the whole batch in one pass.
     """
     if generator_limit is not None:
         alerts = cap_alerts_per_rule(alerts, generator_limit)
-    # merge-key values come from a single from_json pass (get_json_object
-    # needs a foldable path, but merge keys live in a per-row array)
-    rec_map = F.from_json(F.col("record"), "map<string,string>")
-    with_values = alerts.withColumn(
-        "merge_values",
-        F.to_json(
-            F.map_from_arrays(
-                F.col("merge_by_keys"),
-                F.transform(F.col("merge_by_keys"), lambda k: rec_map[k]),
-            )
-        ),
-    )
-
-    def _merge_one(rule_name, merge_values, window_mins, merge_keys,
-                   createds, records, rows):
-        window = timedelta(minutes=int(window_mins or 0))
-        created = [datetime.strptime(c, ALERT_TS_PY_FMT) for c in createds]
-        for group in greedy_groups(created, window):
-            members = [
-                {"created": createds[i], "record": json.loads(records[i] or "{}")}
-                for i in group
-            ]
-            members.sort(key=lambda a: a["created"])
-            merged = synthesize_merged(members, list(merge_keys or []))
-            rows.append((
-                rule_name, merge_values, merged["AlertCount"],
-                merged["AlertTimeFirst"], merged["AlertTimeLast"],
-                json.dumps(merged, sort_keys=True),
-            ))
 
     def merge_batches(batches):
         # mapInPandas over pre-collected groups: one Arrow batch carries
         # MANY (rule, merge-values) groups, so the per-group Python
         # dispatch overhead of applyInPandas (one call per tiny group —
         # measured ~4x slower at 50k groups) disappears.
-        cols = ["rule_name", "merge_values", "alert_count",
-                "alert_time_first", "alert_time_last", "merged_record"]
         for pdf in batches:
             rows: list[tuple] = []
             for rule_name, merge_values, window_mins, merge_keys, alerts in zip(
@@ -209,12 +223,14 @@ def merge_alerts_batch(alerts: DataFrame, generator_limit: int | None = None) ->
             ):
                 createds = [a["created"] for a in alerts]
                 records = [a["record"] for a in alerts]
-                _merge_one(rule_name, merge_values, window_mins, merge_keys,
-                           createds, records, rows)
-            yield pd.DataFrame(rows, columns=cols)
+                window = timedelta(minutes=int(window_mins or 0))
+                groups = greedy_groups(parse_created(createds), window)
+                rows += merged_rows(rule_name, merge_values, merge_keys,
+                                    createds, records, groups)
+            yield pd.DataFrame(rows, columns=MERGED_COLUMNS)
 
     grouped = (
-        with_values.groupBy("rule_name", "merge_values")
+        with_merge_values(alerts).groupBy("rule_name", "merge_values")
         .agg(
             F.first("merge_window_mins").alias("merge_window_mins"),
             F.first("merge_by_keys").alias("merge_by_keys"),

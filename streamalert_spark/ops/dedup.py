@@ -725,6 +725,12 @@ def connected_components(
     fixpoint edges form stars rooted at component minima; labels read
     straight off the final edges. Only nodes that appear in some pair
     are returned (everything else is a singleton by definition).
+
+    The returned labels are lazy: their ``nodes`` side reads the
+    ``cc_base`` cache, which the next call and the next registered
+    query's entry release (``release_op_caches``). Consume them
+    (collect, write, or join into a consumed result) before that; read
+    later, they recompute the upstream pair computation.
     """
     # materialize the input pair set ONCE: `nodes` and `edges` both
     # consume it, and the upstream pair computation is typically the

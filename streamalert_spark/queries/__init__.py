@@ -79,6 +79,11 @@ _CHANGED_THIS_ROUND: list[str] = [
     "dedup_cascade_stages",        # (same cc change)
     "entity_resolution_groups",    # (same cc change)
     "table_profile_sketched",      # counts via no-explode aggregate
+    # merge_alerts_batch now runs the helpers shared with the streaming
+    # merger (with_merge_values, greedy_groups, merged_rows)
+    "alert_merge_greedy",
+    "alert_merge_greedy_groups",
+    "alert_merge_digest",
 ]
 
 

@@ -1,19 +1,20 @@
 """Alert-delivery streaming SINK as a Spark Python DataSource writer.
 
 The reference's alert processor consumes alerts and POSTs per-service
-request bodies (alert_processor/main.py:76-115); the engine's
-AlertDispatcher (streaming/sinks.py) runs that loop inside foreachBatch
-with a driver-side iterator — fine for tests, wrong shape for scale. This
-DataSource moves delivery onto the EXECUTORS: ``write(iterator)`` runs
-per partition, builds each alert's per-output request body with the
-transport-free builders (streaming/outputs.py — slack / pagerduty-v2
-bodies are the real protocol payloads), and stages the delivery ledger as
-a task-local file; ``commit(messages, batchId)`` promotes the staged
-files to attempt-unique epoch-keyed names and atomically writes the
-epoch MANIFEST naming exactly the promoted files (Spark's own file-sink
-commit pattern) — the manifest is the commit point, readers consume only
-manifest-listed files, and ``abort`` removes staging. Swap the local
-renames for a cloud store's atomic copy in production.
+request bodies (alert_processor/main.py:76-115). This DataSource is the
+engine's one delivery path on a stream, and it runs on the EXECUTORS
+(``AlertDispatcher.dispatch_alert`` in streaming/sinks.py is the
+per-alert retry logic for callers holding single alerts).
+``write(iterator)`` runs per partition, builds each alert's per-output
+request body with the transport-free builders (streaming/outputs.py —
+slack / pagerduty-v2 bodies are the real protocol payloads), and stages
+the delivery ledger as a task-local file; ``commit(messages, batchId)``
+promotes the staged files to attempt-unique epoch-keyed names and
+atomically writes the epoch MANIFEST naming exactly the promoted files
+(Spark's own file-sink commit pattern) — the manifest is the commit
+point, readers consume only manifest-listed files, and ``abort`` removes
+staging. Swap the local renames for a cloud store's atomic copy in
+production.
 
 The ledger row is the delivery RECEIPT (alert id, output, service,
 descriptor, md5 of the request body) — what the reference persists to its

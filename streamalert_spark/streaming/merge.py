@@ -1,25 +1,39 @@
-"""Streaming alert merge: applyInPandasWithState keyed by
-(rule_name, merge-key values), with processing-time timeout = merge window.
+"""Streaming alert merge: ONE applyInPandasWithState state function,
+keyed by (rule_name, merge-key values) and bound twice — processing-time
+timeouts (``streaming_merge``) and event-time timeouts under a watermark
+(``streaming_merge_event_time``).
 
 Replaces the reference's DynamoDB-backed merger poll loop
-(alert_merger/main.py:83-132): instead of a table scan per schedule tick,
-alerts buffer in the state store per key; when the oldest buffered alert
-exceeds its merge window (timeout fires), the group is synthesized
-(shared/alert.py:382-433 semantics via alerts.merge.synthesize_merged) and
-emitted. The 50-alert cap dispatches a full group early
-(alert_merger/main.py:34).
+(alert_merger/main.py:83-132). Each call appends the key's new alerts to
+its buffer in the state store, regroups the buffer with
+``alerts.merge.greedy_groups`` and emits, through ``merged_rows`` (both
+shared with ``merge_alerts_batch``), every group that is due:
 
-Scale: state per key is bounded at 50 alerts x bounded alert size; keys
-shard across executors by hash of (rule_name, merge_values) — the same
-partitioning DynamoDB gave the reference. RocksDB state store recommended
-at high key cardinality (spark.sql.streaming.stateStore.providerClass).
+- it holds MAX_MERGE_GROUP_SIZE alerts (alert_merger/main.py:34);
+- event time: its oldest alert + window is at or behind the watermark;
+- processing time: another group follows it (alerts arrive in order, so
+  none can join it), or the call is the key's timeout, which flushes all.
+
+The rest stay buffered. The event-time timeout is the earliest remaining
+oldest + window, always past the watermark; the processing-time timeout
+is one window. Both modes floor the window at one minute (a
+processing-time timeout must be positive). A greedy partition restarted
+at a group boundary yields the same later groups, so batch and stream
+agree on in-order input with windows of a minute or more.
+
+Scale: a key's state is one open group (< MAX_MERGE_GROUP_SIZE alerts)
+under processing time, and its groups still ahead of the watermark under
+event time; each call re-parses and regroups it. Keys shard by hash of
+(rule_name, merge_values), as DynamoDB partitioned the reference; use the
+RocksDB state store at high key cardinality. No benchmark workload runs
+this merger yet, so its cost on real traffic is unmeasured.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
-from typing import Any
+from datetime import timedelta, timezone
+from functools import partial
 
 import pandas as pd
 
@@ -28,99 +42,82 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from streamalert_spark.alerts.merge import (
-    ALERT_TS_PY_FMT,
     MAX_MERGE_GROUP_SIZE,
+    MERGED_COLUMNS,
     MERGED_SCHEMA,
-    synthesize_merged,
+    greedy_groups,
+    merged_rows,
+    parse_created,
+    with_merge_values,
 )
 
 _STATE_SCHEMA = "created array<string>, records array<string>, window_mins bigint, merge_keys array<string>"
 
 
-def _merge_and_rows(
-    rule_name: str,
-    merge_values: str,
-    created: list[str],
-    records: list[str],
-    merge_keys: list[str],
-) -> dict[str, Any]:
-    members = sorted(
-        ({"created": c, "record": json.loads(r or "{}")} for c, r in zip(created, records)),
-        key=lambda a: a["created"],
-    )
-    merged = synthesize_merged(members, list(merge_keys))
-    return {
-        "rule_name": rule_name,
-        "merge_values": merge_values,
-        "alert_count": merged["AlertCount"],
-        "alert_time_first": merged["AlertTimeFirst"],
-        "alert_time_last": merged["AlertTimeLast"],
-        "merged_record": json.dumps(merged, sort_keys=True),
-    }
-
-
-def _merge_state_fn(
+def _merge_state(
     key: tuple,
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
+    event_time: bool,
 ) -> Iterator[pd.DataFrame]:
     rule_name, merge_values = key
-    out_rows: list[dict] = []
-
-    if state.hasTimedOut:
-        created, records, window_mins, merge_keys = state.get
-        out_rows.append(_merge_and_rows(rule_name, merge_values, list(created), list(records), list(merge_keys)))
-        state.remove()
-        yield pd.DataFrame(out_rows)
-        return
-
     created, records, window_mins, merge_keys = (
         state.get if state.exists else ([], [], 0, [])
     )
-    created, records = list(created), list(records)
+    created, records, merge_keys = list(created), list(records), list(merge_keys)
     for pdf in pdfs:
-        for _, row in pdf.iterrows():
-            created.append(row["created"])
-            records.append(row["record"])
-            window_mins = int(row["merge_window_mins"] or 0)
-            merge_keys = list(row["merge_by_keys"] or [])
-            if len(created) >= MAX_MERGE_GROUP_SIZE:
-                # cap reached: dispatch the full group immediately (main.py:34)
-                out_rows.append(_merge_and_rows(rule_name, merge_values, created, records, merge_keys))
-                created, records = [], []
+        if len(pdf):
+            created += pdf["created"].tolist()
+            records += pdf["record"].tolist()
+            last_window = pdf["merge_window_mins"].iloc[-1]
+            window_mins = max(0 if pd.isna(last_window) else int(last_window), 1)
+            last_keys = pdf["merge_by_keys"].iloc[-1]
+            merge_keys = [] if last_keys is None else list(last_keys)
 
-    if created:
-        state.update((created, records, window_mins, merge_keys))
-        state.setTimeoutDuration(max(int(window_mins), 1) * 60 * 1000)
+    window = timedelta(minutes=window_mins)
+    times = parse_created(created)
+    if event_time:
+        now_ms = state.getCurrentWatermarkMs()
+    else:
+        now_ms = float("inf") if state.hasTimedOut else float("-inf")
+
+    def fire_ms(group: list[int]) -> int:
+        # greedy_groups lists members oldest-first; created is UTC
+        oldest = times[group[0]].replace(tzinfo=timezone.utc)
+        return int((oldest + window).timestamp() * 1000)
+
+    groups = greedy_groups(times, window)
+    due, kept = [], []
+    for n, group in enumerate(groups):
+        full = len(group) >= MAX_MERGE_GROUP_SIZE
+        closed = not event_time and n < len(groups) - 1
+        (due if full or closed or fire_ms(group) <= now_ms else kept).append(group)
+
+    if kept:
+        keep = [i for group in kept for i in group]
+        state.update(([created[i] for i in keep], [records[i] for i in keep],
+                      window_mins, merge_keys))
+        if event_time:
+            state.setTimeoutTimestamp(min(fire_ms(group) for group in kept))
+        else:
+            state.setTimeoutDuration(window_mins * 60 * 1000)
     elif state.exists:
         state.remove()
 
-    yield pd.DataFrame(out_rows) if out_rows else pd.DataFrame(
-        columns=["rule_name", "merge_values", "alert_count",
-                 "alert_time_first", "alert_time_last", "merged_record"]
-    )
-
-
-def _keyed(alerts: DataFrame) -> DataFrame:
-    rec_map = F.from_json(F.col("record"), "map<string,string>")
-    return alerts.withColumn(
-        "merge_values",
-        F.to_json(F.map_from_arrays(
-            F.col("merge_by_keys"),
-            F.transform(F.col("merge_by_keys"), lambda k: rec_map[k]),
-        )),
-    )
+    rows = merged_rows(rule_name, merge_values, merge_keys, created, records, due)
+    yield pd.DataFrame(rows, columns=MERGED_COLUMNS)
 
 
 def streaming_merge(alerts: DataFrame) -> DataFrame:
-    """Streaming alerts DataFrame (ALERT_SCHEMA columns) -> merged alerts.
+    """Streaming alerts DataFrame (ALERT_SCHEMA columns) -> merged alerts,
+    with a processing-time timeout of one merge window per key.
 
     Use on a stream; for batch semantics use alerts.merge.merge_alerts_batch.
     """
     return (
-        _keyed(alerts).groupBy("rule_name", "merge_values")
+        with_merge_values(alerts).groupBy("rule_name", "merge_values")
         .applyInPandasWithState(
-            _merge_state_fn,
+            partial(_merge_state, event_time=False),
             outputStructType=MERGED_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
@@ -129,72 +126,21 @@ def streaming_merge(alerts: DataFrame) -> DataFrame:
     )
 
 
-def _merge_state_fn_event_time(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Event-time variant: the group dispatches when the WATERMARK passes
-    oldest-alert + merge window (the reference's 'oldest alert older than
-    its window' check, alert_merger/main.py:106-132, driven by event time
-    so late-but-in-window alerts still join their group)."""
-    import datetime as _dt
-
-    rule_name, merge_values = key
-    out_rows: list[dict] = []
-
-    if state.hasTimedOut:
-        created, records, window_mins, merge_keys = state.get
-        out_rows.append(_merge_and_rows(
-            rule_name, merge_values, list(created), list(records), list(merge_keys)))
-        state.remove()
-        yield pd.DataFrame(out_rows)
-        return
-
-    created, records, window_mins, merge_keys = (
-        state.get if state.exists else ([], [], 0, [])
-    )
-    created, records = list(created), list(records)
-    for pdf in pdfs:
-        for _, row in pdf.iterrows():
-            created.append(row["created"])
-            records.append(row["record"])
-            window_mins = int(row["merge_window_mins"] or 0)
-            merge_keys = list(row["merge_by_keys"] or [])
-            if len(created) >= MAX_MERGE_GROUP_SIZE:
-                out_rows.append(_merge_and_rows(
-                    rule_name, merge_values, created, records, merge_keys))
-                created, records = [], []
-
-    if created:
-        state.update((created, records, window_mins, merge_keys))
-        oldest = _dt.datetime.strptime(min(created), ALERT_TS_PY_FMT)
-        fire_at = oldest + _dt.timedelta(minutes=max(int(window_mins), 1))
-        state.setTimeoutTimestamp(int(fire_at.timestamp() * 1000))
-    elif state.exists:
-        state.remove()
-
-    yield pd.DataFrame(out_rows) if out_rows else pd.DataFrame(
-        columns=["rule_name", "merge_values", "alert_count",
-                 "alert_time_first", "alert_time_last", "merged_record"]
-    )
-
-
 def streaming_merge_event_time(
     alerts: DataFrame, watermark_delay: str = "10 minutes"
 ) -> DataFrame:
     """Event-time streaming merge: watermark on the alert's created time,
-    EventTimeTimeout at oldest + merge window. ``watermark_delay`` is the
-    lateness bound — alerts later than it can no longer join their group
-    (the state store has already emitted)."""
-    with_time = _keyed(alerts).withColumn(
+    a group dispatches once the watermark reaches oldest + merge window.
+    ``watermark_delay`` is the lateness bound — alerts later than it can no
+    longer join their group (the state store has already emitted)."""
+    with_time = with_merge_values(alerts).withColumn(
         "event_time",
-        F.to_timestamp(F.col("created"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"),
+        F.to_timestamp(F.col("created"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX"),
     ).withWatermark("event_time", watermark_delay)
     return (
         with_time.groupBy("rule_name", "merge_values")
         .applyInPandasWithState(
-            _merge_state_fn_event_time,
+            partial(_merge_state, event_time=True),
             outputStructType=MERGED_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",

@@ -17,7 +17,7 @@ alerts table).
          projection, one mapInPandas for every
          Python rule, one explode to alert rows      [§2.4 fused pass]
       -> log types unioned into one alerts frame
-      -> sinks: alerts parquet, historical store, dispatch foreachBatch
+      -> sinks: alerts parquet, historical store, streamalert_outputs delivery
       -> optional: streaming_merge for merge-configured rules
 
 Materialization happens only in ``run_stream_foreach_batch``: the

@@ -23,7 +23,6 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from streamalert_spark.schema.sanitize import sanitize_columns, sanitized_table_name
 
@@ -123,8 +122,9 @@ class AlertDispatcher:
     """The alert-processor dispatch loop (alert_processor/main.py:76-115).
 
     services: {service_name: OutputFn}; publishers: {service_name: [Publisher]}.
-    Runs inside foreachBatch — per batch it attempts every alert's unsent
-    outputs and returns the delivery ledger as a DataFrame-able list.
+    ``dispatch_alert`` attempts one alert's unsent outputs and returns the
+    new sent set. On a stream, alerts are delivered on the executors by the
+    ``streamalert_outputs`` sink (sources/alert_writer.py).
     """
 
     services: dict[str, OutputFn] = field(default_factory=dict)
@@ -153,28 +153,6 @@ class AlertDispatcher:
             except Exception:  # noqa: BLE001 — delivery failure -> retry next batch
                 continue
         return sent
-
-    def foreach_batch(self, ledger: list[dict]):
-        """Build a foreachBatch function that drives delivery and appends to
-        an in-memory ledger (tests) — production would upsert a status table
-        keyed (rule_name, id) like shared/alert_table.py."""
-
-        def run(batch_df: DataFrame, batch_id: int) -> None:
-            for row in batch_df.toLocalIterator():
-                alert = row.asDict(recursive=True)
-                if isinstance(alert.get("outputs"), str):
-                    alert["outputs"] = json.loads(alert["outputs"])
-                sent = self.dispatch_alert(alert, set())
-                ledger.append({
-                    "id": alert.get("id"),
-                    "rule_name": alert.get("rule_name"),
-                    "outputs": list(alert.get("outputs") or []),
-                    "outputs_sent": sorted(sent),
-                    "fully_sent": set(alert.get("outputs") or []) <= sent,
-                    "batch_id": batch_id,
-                })
-
-        return run
 
 
 def console_output(publication: dict, descriptor: str) -> bool:

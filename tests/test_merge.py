@@ -98,6 +98,29 @@ def test_merge_alerts_batch(spark):
     assert merged["MergedBy"] == {"user": "bob"}
 
 
+def test_merge_alerts_batch_two_merge_keys(spark):
+    """A rule merged on two keys: the pandas batch holds merge_by_keys as
+    a numpy array, whose truth value is ambiguous; both keys land in
+    MergedBy."""
+    import json
+
+    from streamalert_spark.alerts.merge import merge_alerts_batch
+
+    t0 = datetime(2024, 1, 1)
+    rows = [(f"id{i}", "r2",
+             (t0 + timedelta(minutes=i)).strftime("%Y-%m-%dT%H:%M:%S.%fZ"),
+             json.dumps({"user": "bob", "host": "h1", "n": i}),
+             ["user", "host"], 5) for i in range(3)]
+    df = spark.createDataFrame(
+        rows,
+        "id string, rule_name string, created string, record string, "
+        "merge_by_keys array<string>, merge_window_mins bigint",
+    )
+    out = merge_alerts_batch(df).collect()
+    assert [r["alert_count"] for r in out] == [3]
+    assert json.loads(out[0]["merged_record"])["MergedBy"] == {"user": "bob", "host": "h1"}
+
+
 def test_generator_limit_caps_oldest_per_rule(spark):
     """alert_merger/main.py:62-66 — at most N alerts per rule per pass,
     oldest first; the rest waits for the next pass."""

@@ -157,15 +157,17 @@ def test_query_surface_has_no_global_sort(spark):
       1-row scalar frames is fine and planned differently).
 
     The default run sweeps a rotating ~1/6 cohort (driver-window budget:
-    building all 242 plans costs ~3.5 min); SPARK_GRAFT_HEAVY=1 sweeps
-    the whole registry in the builder's per-round rotation."""
+    building all 242 plans costs ~3.5 min) plus every query that changed
+    this round; SPARK_GRAFT_HEAVY=1 sweeps the whole registry in the
+    per-round rotation."""
     from tests.conftest import rotating_cohort
 
-    from streamalert_spark.queries import load_all
+    from streamalert_spark.queries import _CHANGED_THIS_ROUND, load_all
 
     registry = load_all()
     offenders = {"range_sort": [], "row_udf": [], "cartesian": []}
-    for name in rotating_cohort(sorted(registry), 6):
+    names = set(rotating_cohort(sorted(registry), 6)) | (set(_CHANGED_THIS_ROUND) & set(registry))
+    for name in sorted(names):
         rq = registry[name]
         plan = _plan(rq.fn(spark, SF_DIR))
         low = plan.lower()

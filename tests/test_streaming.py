@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
+from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
@@ -150,22 +152,29 @@ def test_streaming_merge_stateful(spark, tmp_path):
         .start()
     )
     try:
-        # first micro-batch buffers; timeout fires on a subsequent empty batch
+        # greedy replay of 00:00, 00:01, 00:02 under a 1-minute window:
+        # [00:00, 00:01] and [00:02]. The first is closed by the second and
+        # emits with the data; the open one waits for the timeout, which
+        # fires on a later no-data batch a window (1 minute) after.
         deadline = time.time() + 180
+        seen = []
         rows = []
         while time.time() < deadline:
             rows = spark.sql("SELECT * FROM merged_out").collect()
-            if rows:
+            if rows and not seen:
+                seen = rows
+            if len(rows) >= 2:
                 break
             time.sleep(5)
     finally:
         q.stop()
-    assert len(rows) == 1
-    assert rows[0]["alert_count"] == 3
-    merged_rec = json.loads(rows[0]["merged_record"])
-    assert merged_rec["MergedBy"] == {"user": "bob"}
-    assert merged_rec["AlertTimeFirst"] == "2024-01-01T00:00:00.000000Z"
-    assert merged_rec["AlertTimeLast"] == "2024-01-01T00:02:00.000000Z"
+    assert [r["alert_count"] for r in seen] == [2]
+    got = sorted((r["alert_count"], r["alert_time_first"], r["alert_time_last"])
+                 for r in rows)
+    assert got == [(1, "2024-01-01T00:02:00.000000Z", "2024-01-01T00:02:00.000000Z"),
+                   (2, "2024-01-01T00:00:00.000000Z", "2024-01-01T00:01:00.000000Z")]
+    for r in rows:
+        assert json.loads(r["merged_record"])["MergedBy"] == {"user": "bob"}
 
 
 def test_historical_store_roundtrip(spark, tmp_path):
@@ -315,11 +324,13 @@ def test_streaming_merge_event_time(spark, tmp_path):
         rows = spark.sql("SELECT * FROM merged_et").collect()
     finally:
         q.stop()
-    assert len(rows) == 1
-    assert rows[0]["alert_count"] == 3
-    rec = json.loads(rows[0]["merged_record"])
-    assert rec["AlertTimeFirst"] == "2024-01-01T00:00:00.000000Z"
-    assert rec["AlertTimeLast"] == "2024-01-01T00:02:00.000000Z"
+    # greedy replay under a 1-minute window: [00:00, 00:01] and [00:02];
+    # eve's group is still ahead of the watermark
+    got = sorted((json.loads(r["merged_record"])["AlertTimeFirst"],
+                  json.loads(r["merged_record"])["AlertTimeLast"], r["alert_count"])
+                 for r in rows)
+    assert got == [("2024-01-01T00:00:00.000000Z", "2024-01-01T00:01:00.000000Z", 2),
+                   ("2024-01-01T00:02:00.000000Z", "2024-01-01T00:02:00.000000Z", 1)]
 
 
 def test_streaming_merge_survives_restart(spark, tmp_path):
@@ -368,10 +379,11 @@ def test_streaming_merge_survives_restart(spark, tmp_path):
         rows = spark.read.parquet(out_dir).collect()
     finally:
         q2.stop()
-    assert len(rows) == 1
-    assert rows[0]["alert_count"] == 3
-    rec = json.loads(rows[0]["merged_record"])
-    assert rec["MergedBy"] == {"user": "bob"}
+    # both of bob's greedy groups ([00:00, 00:01] and [00:02]) come back
+    # from the recovered state
+    assert sorted(r["alert_count"] for r in rows) == [1, 2]
+    for r in rows:
+        assert json.loads(r["merged_record"])["MergedBy"] == {"user": "bob"}
 
 
 def test_streaming_merge_rocksdb_state_store(spark, tmp_path):
@@ -554,6 +566,264 @@ def test_processing_time_merge_survives_restart(spark, tmp_path):
     assert rows[0]["alert_count"] == MAX_MERGE_GROUP_SIZE
     rec = json.loads(rows[0]["merged_record"])
     assert rec["MergedBy"] == {"user": "bob"}
+
+
+_MERGE_IN_SCHEMA = ("id string, rule_name string, created string, record string, "
+                    "merge_by_keys array<string>, merge_window_mins bigint")
+_MERGE_T0 = datetime(2024, 3, 1)
+
+
+def _merge_alert(i, seconds, account, rule="r1", window=10):
+    created = _MERGE_T0 + timedelta(seconds=seconds)
+    return {"id": f"id{i}", "rule_name": rule,
+            "created": created.strftime("%Y-%m-%dT%H:%M:%S.%fZ"),
+            "record": json.dumps({"account": account, "n": i}),
+            "merge_by_keys": ["account"], "merge_window_mins": window}
+
+
+def _write_jsonl(path, alerts):
+    with open(path, "w") as fh:
+        for a in alerts:
+            fh.write(json.dumps(a) + "\n")
+
+
+def _replay_groups(alerts):
+    """Independent model: greedy_groups per (rule, account) over the whole
+    input -> Counter of (rule, account, count, first, last)."""
+    from streamalert_spark.alerts.merge import ALERT_TS_PY_FMT, greedy_groups
+
+    by_key = {}
+    for a in alerts:
+        key = (a["rule_name"], json.loads(a["record"])["account"])
+        by_key.setdefault(key, []).append(a["created"])
+    window = timedelta(minutes=alerts[0]["merge_window_mins"])
+    out = Counter()
+    for (rule, account), createds in by_key.items():
+        times = [datetime.strptime(c, ALERT_TS_PY_FMT) for c in createds]
+        for g in greedy_groups(times, window):
+            out[(rule, account, len(g), min(createds[i] for i in g),
+                 max(createds[i] for i in g))] += 1
+    return out
+
+
+def _emitted_groups(rows):
+    return Counter(
+        (r["rule_name"], json.loads(r["merge_values"])["account"],
+         r["alert_count"], r["alert_time_first"], r["alert_time_last"])
+        for r in rows)
+
+
+def _last_watermark(q):
+    marks = [p["eventTime"]["watermark"] for p in q.recentProgress
+             if "watermark" in p.get("eventTime", {})]
+    return max(datetime.strptime(m, "%Y-%m-%dT%H:%M:%S.%fZ") for m in marks)
+
+
+def test_event_time_merge_emits_group_behind_watermark(spark, tmp_path):
+    """A key whose buffered group falls behind the watermark in the same
+    micro-batch that brings it new data: the behind group is emitted there
+    and then (its timeout could no longer be set), and the new alert, which
+    is outside the first one's window, starts a group of its own."""
+    from streamalert_spark.streaming.merge import streaming_merge_event_time
+
+    src_dir = tmp_path / "three_in"
+    src_dir.mkdir()
+    files = [
+        [_merge_alert(0, 0, "rare"), _merge_alert(1, 1, "filler")],
+        [_merge_alert(2 + s, 100 + s * 100, "filler") for s in range(7)],
+        # rare at 701 s, plus filler far enough ahead to pass rare's second window
+        [_merge_alert(20, 701, "rare"), _merge_alert(21, 1500, "filler")],
+    ]
+    for f, alerts in enumerate(files):
+        _write_jsonl(src_dir / f"f{f}.jsonl", alerts)
+        # the file source takes files oldest-modified first: pin the order
+        os.utime(src_dir / f"f{f}.jsonl", (1_700_000_000 + f, 1_700_000_000 + f))
+
+    src = (spark.readStream.schema(_MERGE_IN_SCHEMA)
+           .option("maxFilesPerTrigger", 1).json(str(src_dir)))
+    merged = streaming_merge_event_time(src, watermark_delay="1 minute")
+    q = (merged.writeStream.format("memory").queryName("merged_three")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ckpt_three"))
+         .trigger(availableNow=True).start())
+    try:
+        assert q.awaitTermination(180)
+        assert q.exception() is None
+        rows = spark.sql("SELECT * FROM merged_three WHERE merge_values LIKE '%rare%'").collect()
+    finally:
+        q.stop()
+    got = sorted((r["alert_count"], r["alert_time_first"]) for r in rows)
+    assert got == [(1, "2024-03-01T00:00:00.000000Z"),
+                   (1, "2024-03-01T00:11:41.000000Z")]
+
+
+def test_event_time_merge_backlog_matches_greedy_replay(spark, tmp_path):
+    """A drained backlog of ~2k alerts (Zipf-skewed accounts, ~1 s apart,
+    10-minute window) read two files per micro-batch with a 1-minute
+    watermark delay: the query finishes, and its groups are exactly the
+    greedy replay's groups that are full or behind the last watermark."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streamalert_spark.alerts.merge import MAX_MERGE_GROUP_SIZE
+    from streamalert_spark.streaming.merge import streaming_merge_event_time
+
+    rng = random.Random(1)
+    weights = [1.0 / k ** 1.1 for k in range(1, 201)]
+    accounts = rng.choices([f"acct{k:03d}" for k in range(200)], weights, k=2000)
+    alerts = [_merge_alert(i, i + rng.random() * 0.5, acct)
+              for i, acct in enumerate(accounts)]
+    src_dir = tmp_path / "backlog_in"
+    src_dir.mkdir()
+    schema = pa.schema([("id", pa.string()), ("rule_name", pa.string()),
+                        ("created", pa.string()), ("record", pa.string()),
+                        ("merge_by_keys", pa.list_(pa.string())),
+                        ("merge_window_mins", pa.int64())])
+    for f in range(20):
+        path = str(src_dir / f"part-{f:02d}.parquet")
+        pq.write_table(pa.Table.from_pylist(alerts[f * 100:(f + 1) * 100], schema=schema), path)
+        # the file source takes files oldest-modified first: pin the order
+        os.utime(path, (1_700_000_000 + f, 1_700_000_000 + f))
+
+    src = (spark.readStream.schema(_MERGE_IN_SCHEMA)
+           .option("maxFilesPerTrigger", 2).parquet(str(src_dir)))
+    merged = streaming_merge_event_time(src, watermark_delay="1 minute")
+    q = (merged.writeStream.format("memory").queryName("merged_backlog")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ckpt_backlog"))
+         .trigger(availableNow=True).start())
+    try:
+        assert q.awaitTermination(300)
+        assert q.exception() is None
+        rows = spark.sql("SELECT * FROM merged_backlog").collect()
+        watermark = _last_watermark(q)
+    finally:
+        q.stop()
+
+    replay = _replay_groups(alerts)
+    emitted = _emitted_groups(rows)
+    assert max(emitted.values()) == 1                      # none emitted twice
+    assert not emitted - replay                            # all are replay groups
+    due = [g for g in replay
+           if g[2] >= MAX_MERGE_GROUP_SIZE
+           or datetime.strptime(g[3], "%Y-%m-%dT%H:%M:%S.%fZ")
+           + timedelta(minutes=10) <= watermark]
+    assert len(due) > 100
+    assert not [g for g in due if g not in emitted]
+
+
+def test_processing_time_merge_emits_closed_groups_of_active_key(spark, tmp_path):
+    """A key that gets an alert every third of its window never reaches its
+    processing-time timeout, yet its closed groups (followed by a later
+    group, not full) are emitted while it is still active."""
+    from streamalert_spark.streaming.merge import streaming_merge
+
+    src_dir = tmp_path / "active_in"
+    src_dir.mkdir()
+    # 12 alerts 200 s apart, 10-minute window: greedy groups of 4
+    alerts = [_merge_alert(i, i * 200, "busy") for i in range(12)]
+    for f in range(4):
+        path = src_dir / f"f{f}.jsonl"
+        _write_jsonl(path, alerts[f * 3:(f + 1) * 3])
+        # the file source takes files oldest-modified first: pin the order
+        os.utime(path, (1_700_000_000 + f, 1_700_000_000 + f))
+
+    src = (spark.readStream.schema(_MERGE_IN_SCHEMA)
+           .option("maxFilesPerTrigger", 1).json(str(src_dir)))
+    q = (streaming_merge(src).writeStream.format("memory").queryName("active_out")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ckpt_active")).start())
+    try:
+        # processAllAvailable never settles under ProcessingTimeTimeout, so
+        # poll progress until every input row is committed; the 10-minute
+        # timeout cannot fire within the test
+        deadline = time.time() + 180
+        while time.time() < deadline:
+            if sum(int(p["numInputRows"]) for p in q.recentProgress) >= len(alerts):
+                break
+            time.sleep(2)
+        rows = spark.sql("SELECT * FROM active_out").collect()
+    finally:
+        q.stop()
+    assert sorted((r["alert_count"], r["alert_time_first"]) for r in rows) == [
+        (4, "2024-03-01T00:00:00.000000Z"), (4, "2024-03-01T00:13:20.000000Z")]
+
+
+def test_batch_and_streaming_merges_agree(spark, tmp_path):
+    """One merge, one answer: merge_alerts_batch, streaming_merge (after
+    its timeout) and streaming_merge_event_time (after the watermark
+    passes) give the same merged rows on a fixture that spans several
+    windows and holds a 51-alert burst. Rules with no merge window (0 or
+    NULL) merge over one minute in both streaming modes."""
+    from streamalert_spark.alerts.merge import merge_alerts_batch
+    from streamalert_spark.streaming.merge import (
+        streaming_merge, streaming_merge_event_time,
+    )
+
+    fixture = [_merge_alert(i, i, "alice", window=1) for i in range(51)]
+    fixture += [_merge_alert(51 + i, s, "alice", window=1)
+                for i, s in enumerate((70, 100, 200, 330))]
+    fixture += [_merge_alert(60 + i, s, "bob", window=1)
+                for i, s in enumerate((10.5, 65.5, 130.5))]
+    fixture += [_merge_alert(70, 20.25, "bob", rule="r2", window=1)]
+    pt_dir, et_dir = tmp_path / "pt_in", tmp_path / "et_in"
+    pt_dir.mkdir()
+    et_dir.mkdir()
+    # not given to merge_alerts_batch, which groups over the raw window
+    no_window = [_merge_alert(80 + i, s, "carol", rule=rule, window=window)
+                 for rule, window in (("r0", 0), ("rnull", None))
+                 for i, s in enumerate((0, 30, 59, 61, 90))]
+    for d in (pt_dir, et_dir):
+        _write_jsonl(d / "a.jsonl", fixture)
+        _write_jsonl(d / "no_window.jsonl", no_window)
+
+    def full_rows(rows, windowed=True):
+        return Counter(tuple(r) for r in rows
+                       if (r["rule_name"] not in ("r0", "rnull")) == windowed)
+
+    pt = (streaming_merge(spark.readStream.schema(_MERGE_IN_SCHEMA).json(str(pt_dir)))
+          .writeStream.format("memory").queryName("agree_pt").outputMode("append")
+          .option("checkpointLocation", str(tmp_path / "ckpt_pt")).start())
+    try:
+        batch = full_rows(merge_alerts_batch(
+            spark.read.schema(_MERGE_IN_SCHEMA).json(str(pt_dir / "a.jsonl"))).collect())
+        assert sorted(k[2] for k in batch.elements()) == [1, 1, 1, 1, 2, 3, 50]
+
+        et_src = spark.readStream.schema(_MERGE_IN_SCHEMA).json(str(et_dir))
+        et = (streaming_merge_event_time(et_src, watermark_delay="1 minute")
+              .writeStream.format("memory").queryName("agree_et").outputMode("append")
+              .option("checkpointLocation", str(tmp_path / "ckpt_et")).start())
+        try:
+            et.processAllAvailable()
+            # a later sentinel rule advances the watermark past every group;
+            # one more batch applies it
+            for name, s in (("b", 3600), ("c", 3601)):
+                _write_jsonl(et_dir / f"{name}.jsonl",
+                             [_merge_alert(99, s, "zed", rule="sentinel", window=1)])
+                et.processAllAvailable()
+            et_rows = spark.sql(
+                "SELECT * FROM agree_et WHERE rule_name != 'sentinel'").collect()
+        finally:
+            et.stop()
+
+        deadline = time.time() + 240
+        pt_rows = []
+        while time.time() < deadline:
+            pt_rows = spark.sql("SELECT * FROM agree_pt").collect()
+            if len(pt_rows) >= sum(batch.values()) + 4:
+                break
+            time.sleep(5)
+    finally:
+        pt.stop()
+    assert full_rows(et_rows) == batch
+    assert full_rows(pt_rows) == batch
+    no_window_groups = full_rows(et_rows, windowed=False)
+    assert no_window_groups == full_rows(pt_rows, windowed=False)
+    # one-minute greedy groups of 0, 30, 59, 61, 90 s: [0, 30, 59], [61, 90]
+    assert sorted((k[0], k[2]) for k in no_window_groups.elements()) == [
+        ("r0", 2), ("r0", 3), ("rnull", 2), ("rnull", 3)]
 
 
 def test_streaming_dedupe_across_microbatches(spark, tmp_path):
