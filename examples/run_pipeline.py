@@ -40,7 +40,7 @@ def main() -> None:
     pipeline = StreamingPipeline(schemas=conf, rules=build_rules(), cluster="prod")
 
     if len(sys.argv) > 1:
-        query = pipeline.run_stream(
+        query = pipeline.run_stream_foreach_batch(
             spark,
             source_path=sys.argv[1],
             checkpoint="/tmp/streamalert_spark_ckpt",

@@ -13,7 +13,7 @@ Reference semantics:
   (shared/alert.py:289-433).
 
 Every merge path is built from three pieces here: ``with_merge_values``
-(the key column), ``greedy_groups`` (the grouping) and ``merged_rows``
+(the key column), ``merge_groups`` (the grouping) and ``merged_rows``
 (synthesis into MERGED_SCHEMA rows). ``merge_alerts_batch`` runs them
 once over every key's alerts; the streaming merger
 (streamalert_spark.streaming.merge) runs the same three on each key's
@@ -150,6 +150,18 @@ def greedy_groups(
     return groups
 
 
+def merge_groups(times: list[datetime],
+                 window_mins: Any) -> tuple[timedelta | None, list[list[int]]]:
+    """One key's alerts grouped under its rule's window; every merge path
+    calls this. A rule without a window (0 or NULL, which pandas holds as
+    NaN) never merges, as in the reference (shared/alert.py can_merge):
+    each alert is a one-alert group, due at once, and the window is None."""
+    if pd.isna(window_mins) or window_mins <= 0:
+        return None, [[i] for i in sorted(range(len(times)), key=times.__getitem__)]
+    window = timedelta(minutes=int(window_mins))
+    return window, greedy_groups(times, window)
+
+
 MERGED_SCHEMA = (
     "rule_name string, merge_values string, alert_count bigint, "
     "alert_time_first string, alert_time_last string, merged_record string"
@@ -179,7 +191,7 @@ def parse_created(createds: list[str]) -> list[datetime]:
 def merged_rows(rule_name: str, merge_values: str, merge_keys: list[str],
                 createds: list[str], records: list[str],
                 groups: list[list[int]]) -> list[tuple]:
-    """One MERGED_SCHEMA row per ``greedy_groups`` group of alert indices
+    """One MERGED_SCHEMA row per ``merge_groups`` group of alert indices
     (oldest-first) through ``synthesize_merged``. ``merge_keys`` may
     be the numpy array a pandas batch holds, so no truth test on it."""
     merge_keys = [] if merge_keys is None else list(merge_keys)
@@ -200,12 +212,11 @@ def merge_alerts_batch(alerts: DataFrame, generator_limit: int | None = None) ->
     """Batch merge over an alerts DataFrame (columns per ALERT_SCHEMA).
 
     groupBy (rule_name, merge key values), then every key's alerts go
-    through ``greedy_groups`` and ``merged_rows``. Alerts without merge
-    config pass through as singleton groups downstream (reference
-    dispatches them immediately, main.py:163-191) — callers should
-    pre-filter on merge_window_mins > 0. ``generator_limit`` applies the
-    reference's per-rule per-pass cap (cap_alerts_per_rule); None
-    processes the whole batch in one pass.
+    through ``merge_groups`` and ``merged_rows``. Alerts of a rule without
+    a merge window pass through as one-alert groups (the reference
+    dispatches them immediately, main.py:163-191). ``generator_limit``
+    applies the reference's per-rule per-pass cap (cap_alerts_per_rule);
+    None processes the whole batch in one pass.
     """
     if generator_limit is not None:
         alerts = cap_alerts_per_rule(alerts, generator_limit)
@@ -223,8 +234,7 @@ def merge_alerts_batch(alerts: DataFrame, generator_limit: int | None = None) ->
             ):
                 createds = [a["created"] for a in alerts]
                 records = [a["record"] for a in alerts]
-                window = timedelta(minutes=int(window_mins or 0))
-                groups = greedy_groups(parse_created(createds), window)
+                _, groups = merge_groups(parse_created(createds), window_mins)
                 rows += merged_rows(rule_name, merge_values, merge_keys,
                                     createds, records, groups)
             yield pd.DataFrame(rows, columns=MERGED_COLUMNS)

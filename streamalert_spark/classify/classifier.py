@@ -183,11 +183,6 @@ class ClassifiedBatch:
         """Built on first access: the detection path never reads it."""
         return self.build_invalid()
 
-    def counts(self) -> dict[str, int]:
-        out = {name: df.count() for name, df in self.by_log_type.items()}
-        out["_invalid"] = self.invalid.count()
-        return out
-
 
 class Classifier:
     def __init__(self, registry: SchemaRegistry):

@@ -9,25 +9,35 @@ table 100 keys at a time (threat_intel.py:45,153-166,168-229), and annotate
 matched records with a 'streamalert:ioc' map {ioc_type: [values]}
 (threat_intel.py:105-132).
 
-Spark mapping (SURVEY.md §2.3/§2.7): explode the candidates, broadcast
-left-semi/inner join against the ioc table on ioc_value, re-aggregate per
-record into the ioc map. The 100-key batching disappears — the join IS the
-batch. CIDR exclusion is a native bitmask comparison on the IPv4 integer
-(no UDF): ip & mask == net & mask.
+Spark mapping (SURVEY.md §2.3/§2.7), one pass shared by ``hits`` and
+``annotate``:
+
+- candidates: one array<struct<ioc_type, value>> column, a concat of one
+  array per (ioc_type, normalized type) pair, built once per ThreatIntel;
+- explode: one ``inline`` of that column next to the record id;
+- join: the CIDR filter, then one equi-join on ioc_value against the IOC
+  frame, gated on every call so a swapped ``ioc_df`` takes effect at once;
+- aggregate (``annotate`` only): one groupBy(record id) collecting the
+  sorted set of (ioc_type, value) pairs, projected into the
+  map<ioc_type, array<value>> and left-joined back to the records.
+
+The 100-key batching disappears — the join IS the batch. CIDR exclusion
+is a native range comparison on the IPv4 integer (no UDF).
 
 Scale: ioc tables are usually MBs -> broadcast, but the reference's feed
 downloader paginates an UNBOUNDED ThreatStream feed (tens of millions of
 IOCs are real), so the hint is size-gated (``gated_broadcast``): under the
 budget the join broadcasts; over it the un-hinted equi-join falls to AQE,
 which shuffles both sides on ioc_value — the only safe plan for a huge
-feed. Candidate explosion is bounded by normalization fan-out; the groupBy
-re-aggregation shuffles only matched records (a tiny fraction), keyed by
+feed. Candidate explosion is bounded by normalization fan-out; the one
+aggregate shuffles only matched records (a tiny fraction), keyed by
 record id.
 """
 
 from __future__ import annotations
 
 import ipaddress
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -85,60 +95,60 @@ class ThreatIntel:
         self.normalized_ioc_types = normalized_ioc_types
         self.excluded_cidrs = excluded_cidrs or []
 
-    def _candidates(self, df: DataFrame, id_col: str) -> DataFrame:
-        """Explode (record_id, ioc_type, value) candidates from the
-        normalization map (threat_intel.py:293-324)."""
+    @cached_property
+    def _candidates(self) -> Column:
+        """array<struct<ioc_type, value>> of every candidate IOC value in the
+        normalization map (threat_intel.py:293-324). It references the map
+        by name only, so one build serves every frame."""
         norm = F.col("streamalert_normalization")
-        frames = []
-        for ioc_type, norm_types in self.normalized_ioc_types.items():
-            for nt in norm_types:
-                entries = norm[nt]
-                values = F.flatten(F.transform(entries, lambda e: e["values"]))
-                frames.append(
-                    df.select(
-                        F.col(id_col).alias("__record_id"),
-                        F.lit(ioc_type).alias("ioc_type"),
-                        F.explode(F.coalesce(values, F.array())).alias("value"),
-                    )
-                )
-        if not frames:
+        empty = F.array().cast("array<struct<ioc_type:string, value:string>>")
+        arrays = [
+            F.coalesce(
+                F.transform(
+                    F.flatten(norm[nt]["values"]),
+                    lambda v: F.struct(F.lit(ioc_type).alias("ioc_type"), v.alias("value")),
+                ),
+                empty,
+            )
+            for ioc_type, norm_types in self.normalized_ioc_types.items()
+            for nt in norm_types
+        ]
+        if not arrays:
             raise ValueError("no normalized_ioc_types configured")
-        out = frames[0]
-        for f_ in frames[1:]:
-            out = out.unionByName(f_)
+        return F.concat(*arrays)
+
+    def _joined(self, df: DataFrame, id_col: str) -> DataFrame:
+        """(__record_id, ioc_type, value, sub_type): one explode, the CIDR
+        filter, one join against the IOC frame."""
+        cands = df.select(F.col(id_col).alias("__record_id"), F.inline(self._candidates))
         if self.excluded_cidrs:
             ip_long = ipv4_to_long(F.col("value"))
-            out = out.filter(ip_long.isNull() | ~in_any_cidr(ip_long, self.excluded_cidrs))
-        return out
+            cands = cands.filter(ip_long.isNull() | ~in_any_cidr(ip_long, self.excluded_cidrs))
+        return cands.join(
+            gated_broadcast(self.ioc_df), F.col("value") == F.col("ioc_value"), "inner")
 
     def hits(self, df: DataFrame, id_col: str = "streamalert_record_id") -> DataFrame:
-        """Flat (streamalert_record_id, ioc_type, value, sub_type) hit rows —
-        the broadcast join replacing the reference's DynamoDB batch probe."""
-        cands = self._candidates(df, id_col)
-        return cands.join(
-            gated_broadcast(self.ioc_df),
-            cands["value"] == self.ioc_df["ioc_value"],
-            "inner",
-        ).select(
+        """Distinct (streamalert_record_id, ioc_type, value, sub_type) hit
+        rows — the join replacing the reference's DynamoDB batch probe."""
+        return self._joined(df, id_col).select(
             F.col("__record_id").alias("streamalert_record_id"),
             "ioc_type",
             "value",
             "sub_type",
         ).distinct()
 
-    def matches(self, df: DataFrame, id_col: str = "streamalert_record_id") -> DataFrame:
-        """(record_id, ioc map) for records with at least one IOC hit
-        (the 'streamalert:ioc' annotation shape, threat_intel.py:105-132)."""
-        hits = self.hits(df, id_col).withColumnRenamed("streamalert_record_id", "__record_id")
-        return (
-            hits.groupBy("__record_id", "ioc_type")
-            .agg(F.array_distinct(F.collect_list("value")).alias("values"))
-            .groupBy("__record_id")
-            .agg(F.map_from_entries(F.collect_list(F.struct("ioc_type", "values"))).alias("streamalert_ioc"))
-        )
-
     def annotate(self, df: DataFrame, id_col: str = "streamalert_record_id") -> DataFrame:
-        """Attach 'streamalert_ioc' to matched records (left join keeps
-        non-matched records with a null map — threat_intel.py:105-132)."""
-        m = self.matches(df, id_col)
+        """Attach 'streamalert_ioc', map<ioc_type, array<value>>, to matched
+        records (threat_intel.py:105-132); the left join leaves a null map on
+        the rest. Keys and each key's values come out sorted, so the map is
+        deterministic."""
+        pairs = F.col("__pairs")
+        types = F.array_distinct(pairs["ioc_type"])
+        m = (
+            self._joined(df, id_col).groupBy("__record_id")
+            .agg(F.array_sort(F.collect_set(F.struct("ioc_type", "value"))).alias("__pairs"))
+            .select("__record_id", F.map_from_arrays(types, F.transform(
+                types, lambda t: F.filter(pairs, lambda p: p["ioc_type"] == t)["value"],
+            )).alias("streamalert_ioc"))
+        )
         return df.join(m, df[id_col] == m["__record_id"], "left").drop("__record_id")

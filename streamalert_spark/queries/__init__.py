@@ -84,6 +84,9 @@ _CHANGED_THIS_ROUND: list[str] = [
     "alert_merge_greedy",
     "alert_merge_greedy_groups",
     "alert_merge_digest",
+    # ThreatIntel.hits now reads all candidates through one explode
+    "threat_intel_hits",
+    "threat_intel_feed_ingest",
 ]
 
 

@@ -38,7 +38,6 @@ to executing a small micro-batch.
 from __future__ import annotations
 
 import copy
-import json
 import os
 import time
 from collections.abc import Iterator
@@ -401,7 +400,3 @@ def _all_of(conds: list[Column]) -> Column | None:
         out = c if out is None else (out & c)
     return out
 
-
-def record_to_dict(record_json: str) -> dict:
-    """Inverse of the engine's to_json for delivery-side publishers."""
-    return json.loads(record_json)

@@ -6,9 +6,11 @@ timeouts (``streaming_merge``) and event-time timeouts under a watermark
 Replaces the reference's DynamoDB-backed merger poll loop
 (alert_merger/main.py:83-132). Each call appends the key's new alerts to
 its buffer in the state store, regroups the buffer with
-``alerts.merge.greedy_groups`` and emits, through ``merged_rows`` (both
+``alerts.merge.merge_groups`` and emits, through ``merged_rows`` (both
 shared with ``merge_alerts_batch``), every group that is due:
 
+- its rule has no merge window: each alert is its own group, emitted at
+  once and never held in state;
 - it holds MAX_MERGE_GROUP_SIZE alerts (alert_merger/main.py:34);
 - event time: its oldest alert + window is at or behind the watermark;
 - processing time: another group follows it (alerts arrive in order, so
@@ -16,10 +18,8 @@ shared with ``merge_alerts_batch``), every group that is due:
 
 The rest stay buffered. The event-time timeout is the earliest remaining
 oldest + window, always past the watermark; the processing-time timeout
-is one window. Both modes floor the window at one minute (a
-processing-time timeout must be positive). A greedy partition restarted
-at a group boundary yields the same later groups, so batch and stream
-agree on in-order input with windows of a minute or more.
+is one window. A greedy partition restarted at a group boundary yields
+the same later groups, so batch and stream agree on in-order input.
 
 Scale: a key's state is one open group (< MAX_MERGE_GROUP_SIZE alerts)
 under processing time, and its groups still ahead of the watermark under
@@ -32,7 +32,7 @@ this merger yet, so its cost on real traffic is unmeasured.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from datetime import timedelta, timezone
+from datetime import timezone
 from functools import partial
 
 import pandas as pd
@@ -45,7 +45,7 @@ from streamalert_spark.alerts.merge import (
     MAX_MERGE_GROUP_SIZE,
     MERGED_COLUMNS,
     MERGED_SCHEMA,
-    greedy_groups,
+    merge_groups,
     merged_rows,
     parse_created,
     with_merge_values,
@@ -62,45 +62,44 @@ def _merge_state(
 ) -> Iterator[pd.DataFrame]:
     rule_name, merge_values = key
     created, records, window_mins, merge_keys = (
-        state.get if state.exists else ([], [], 0, [])
+        state.get if state.exists else ([], [], None, [])
     )
     created, records, merge_keys = list(created), list(records), list(merge_keys)
     for pdf in pdfs:
         if len(pdf):
             created += pdf["created"].tolist()
             records += pdf["record"].tolist()
-            last_window = pdf["merge_window_mins"].iloc[-1]
-            window_mins = max(0 if pd.isna(last_window) else int(last_window), 1)
+            window_mins = pdf["merge_window_mins"].iloc[-1]
             last_keys = pdf["merge_by_keys"].iloc[-1]
             merge_keys = [] if last_keys is None else list(last_keys)
 
-    window = timedelta(minutes=window_mins)
     times = parse_created(created)
+    window, groups = merge_groups(times, window_mins)
     if event_time:
         now_ms = state.getCurrentWatermarkMs()
     else:
         now_ms = float("inf") if state.hasTimedOut else float("-inf")
 
     def fire_ms(group: list[int]) -> int:
-        # greedy_groups lists members oldest-first; created is UTC
+        # groups list members oldest-first; created is UTC
         oldest = times[group[0]].replace(tzinfo=timezone.utc)
         return int((oldest + window).timestamp() * 1000)
 
-    groups = greedy_groups(times, window)
     due, kept = [], []
     for n, group in enumerate(groups):
         full = len(group) >= MAX_MERGE_GROUP_SIZE
         closed = not event_time and n < len(groups) - 1
-        (due if full or closed or fire_ms(group) <= now_ms else kept).append(group)
+        (due if window is None or full or closed or fire_ms(group) <= now_ms
+         else kept).append(group)
 
     if kept:
         keep = [i for group in kept for i in group]
         state.update(([created[i] for i in keep], [records[i] for i in keep],
-                      window_mins, merge_keys))
+                      int(window_mins), merge_keys))
         if event_time:
             state.setTimeoutTimestamp(min(fire_ms(group) for group in kept))
         else:
-            state.setTimeoutDuration(window_mins * 60 * 1000)
+            state.setTimeoutDuration(int(window.total_seconds() * 1000))
     elif state.exists:
         state.remove()
 

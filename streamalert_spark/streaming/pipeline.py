@@ -20,13 +20,12 @@ alerts table).
       -> sinks: alerts parquet, historical store, streamalert_outputs delivery
       -> optional: streaming_merge for merge-configured rules
 
-Materialization happens only in ``run_stream_foreach_batch``: the
-micro-batch is persisted once, so every log type's branch reads the same
-scan, and each log type's normalized frame is persisted before IOC
-annotation, so its uuid record ids are drawn once and the annotation's
-self-join reads them from the cache. Both are released after the batch's
-write. ``build_alerts`` and ``run_stream`` build the same plan without the
-persists (a streaming source cannot be persisted).
+``build_alerts`` builds the plan for any source frame;
+``run_stream_foreach_batch`` is the streaming entry. It persists each
+micro-batch once, so every log type's branch reads the same scan, and each
+log type's normalized frame before IOC annotation, so its uuid record ids
+are drawn once and the annotation's self-join reads them from the cache.
+Both are released after the batch's write.
 """
 
 from __future__ import annotations
@@ -135,34 +134,6 @@ class StreamingPipeline:
             out = out.unionByName(f_)
         return out
 
-    def run_stream(
-        self,
-        spark: SparkSession,
-        source_path: str,
-        checkpoint: str,
-        alerts_path: str,
-        service: str = "",
-        resource: str = "",
-        schema: str = "value string",
-    ):
-        """File-source streaming variant: JSON-lines directory -> alerts
-        parquet. Returns the StreamingQuery."""
-        src = (
-            spark.readStream.format("text")
-            .schema(schema)
-            .load(source_path)
-        )
-        alerts = self.build_alerts(src, service=service, resource=resource)
-        if alerts is None:
-            raise ValueError("no rules routed to any configured log type")
-        return (
-            alerts.writeStream.format("parquet")
-            .option("path", alerts_path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .start()
-        )
-
     def run_stream_foreach_batch(
         self,
         spark: SparkSession,
@@ -174,20 +145,20 @@ class StreamingPipeline:
         schema: str = "value string",
         available_now: bool = False,
     ):
-        """Per-micro-batch variant: classify -> normalize -> IOC annotate
-        -> rules run with BATCH semantics inside foreachBatch — required
-        when threat_intel is configured (the hit-map aggregation cannot
-        plan mid-stream in append mode), and the Spark-native equivalent
-        of the reference's per-invocation DynamoDB probe: each micro-batch
-        re-reads the broadcast IOC frame, so IOC refresh needs no query
-        restart. Exactly-once: each batch OVERWRITES its own
+        """The streaming entry: text files under ``source_path`` -> alerts
+        parquet; returns the StreamingQuery. Each micro-batch runs classify
+        -> normalize -> IOC annotate -> rules with BATCH semantics inside
+        foreachBatch, so the IOC hit-map aggregation plans (append mode
+        cannot) and, like the reference's per-invocation DynamoDB probe,
+        each micro-batch re-reads the IOC frame: IOC refresh needs no
+        query restart. Exactly-once: each batch OVERWRITES its own
         batch-id-keyed partition directory, so a micro-batch retried
         after a sink write but before the checkpoint commit replaces its
         own output instead of appending duplicates (the standard
         foreachBatch idempotence contract)."""
         # eager routing validation — the per-batch loop would otherwise
         # silently drop every batch when no rule routes to any configured
-        # log type (run_stream fails loudly the same way)
+        # log type
         probe = spark.createDataFrame([], schema)
         if self.build_alerts(probe, service=service, resource=resource) is None:
             raise ValueError("no rules routed to any configured log type")

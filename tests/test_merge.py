@@ -121,6 +121,28 @@ def test_merge_alerts_batch_two_merge_keys(spark):
     assert json.loads(out[0]["merged_record"])["MergedBy"] == {"user": "bob", "host": "h1"}
 
 
+def test_merge_alerts_batch_no_window_passes_through(spark):
+    """A rule without a merge window never merges (shared/alert.py
+    can_merge): a NULL window, which pandas holds as NaN, and a 0 window
+    both give one-alert groups, even for alerts created at the same time."""
+    import json
+
+    from streamalert_spark.alerts.merge import merge_alerts_batch
+
+    created = datetime(2024, 1, 1).strftime("%Y-%m-%dT%H:%M:%S.%fZ")
+    rows = [("n0", "rnull", created, json.dumps({"user": "bob"}), ["user"], None)]
+    rows += [(f"z{i}", "r0", created, json.dumps({"user": "bob", "n": i}), ["user"], 0)
+             for i in range(2)]
+    df = spark.createDataFrame(
+        rows,
+        "id string, rule_name string, created string, record string, "
+        "merge_by_keys array<string>, merge_window_mins bigint",
+    )
+    out = merge_alerts_batch(df).collect()
+    assert sorted((r["rule_name"], r["alert_count"]) for r in out) == [
+        ("r0", 1), ("r0", 1), ("rnull", 1)]
+
+
 def test_generator_limit_caps_oldest_per_rule(spark):
     """alert_merger/main.py:62-66 — at most N alerts per rule per pass,
     oldest first; the rest waits for the next pass."""

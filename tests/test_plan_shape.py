@@ -58,6 +58,33 @@ def test_threat_intel_is_broadcast_join(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_threat_intel_annotate_one_explode_one_aggregate(spark):
+    """IOC annotation is one pass: every (ioc_type, normalized type) pair
+    rides one Generate, nothing is unioned, and the per-record map needs
+    one aggregate shuffle (the join back to the records is not one)."""
+    from streamalert_spark.enrich.threat_intel import ThreatIntel
+    from streamalert_spark.normalize.normalizer import NormalizationSpec, Normalizer, PathSpec
+    from streamalert_spark.session import local_rows_df
+
+    records = local_rows_df(spark, [("1", "1.2.3.4", "evil.com")],
+                            "id string, src string, host string")
+    normed = Normalizer(NormalizationSpec(types={
+        "sourceAddress": [PathSpec(path="src")], "domain": [PathSpec(path="host")],
+    })).apply(records.select("id", F.struct("src", "host").alias("record")),
+              record_id=F.col("id"))
+    ioc = local_rows_df(spark, [("1.2.3.4", "mal_ip"), ("evil.com", "mal_domain")],
+                        "ioc_value string, sub_type string")
+    ti = ThreatIntel(ioc, {"ip": ["sourceAddress"], "domain": ["domain"]})
+    lines = _plan(ti.annotate(normed)).splitlines()
+    nodes = [line.lstrip(" :+-") for line in lines]
+    assert sum(n.startswith("Generate ") for n in nodes) == 1, "\n".join(lines)
+    assert not any(n.startswith("Union") for n in nodes), "\n".join(lines)
+    agg_shuffles = sum(
+        n.startswith("Exchange hashpartitioning") and "Aggregate(" in parent
+        for parent, n in zip(nodes, nodes[1:]))
+    assert agg_shuffles == 1, "\n".join(lines)
+
+
 def test_lookup_enrich_is_broadcast_join(spark):
     from streamalert_spark.queries import load_all
 

@@ -129,6 +129,71 @@ def test_threat_intel_cidr_exclusion(spark):
     assert len(hits) == 1 and hits[0]["value"] == "1.2.3.4"
 
 
+def test_threat_intel_annotate_matches_python_model(spark):
+    """threat_intel.py:105-132 — each record's 'streamalert_ioc' map equals
+    a pure-Python model: {ioc_type: values} over the record's candidates
+    that are in the IOC table and outside the excluded CIDRs; NULL when no
+    candidate hits."""
+    import ipaddress
+
+    from streamalert_spark.enrich.threat_intel import ThreatIntel
+    from streamalert_spark.normalize.normalizer import NormalizationSpec, Normalizer, PathSpec
+
+    records = [
+        # one value reached through two normalized types, plus a domain
+        {"id": "r1", "src": "1.2.3.4", "dst": "1.2.3.4", "host": "evil.com"},
+        # the same value under two IOC types
+        {"id": "r2", "src": "8.8.8.8", "dst": None, "host": "8.8.8.8"},
+        # a CIDR-excluded IOC next to a hit
+        {"id": "r3", "src": "10.0.0.5", "dst": "9.9.9.9", "host": None},
+        # no hit: an excluded IOC and a value not in the table
+        {"id": "r4", "src": "10.0.0.6", "dst": None, "host": "benign.com"},
+    ]
+    ioc_rows = [("1.2.3.4", "mal_ip"), ("1.2.3.4", "c2"),   # duplicate, two sub_types
+                ("8.8.8.8", "mal_ip"), ("evil.com", "mal_domain"),
+                ("9.9.9.9", "mal_ip"), ("10.0.0.5", "mal_ip"), ("10.0.0.6", "mal_ip")]
+    # ip reads two normalized types; fileHash is absent from the normalizer
+    ioc_types = {"ip": ["sourceAddress", "destinationAddress"],
+                 "domain": ["domain", "fileHash"]}
+    fields = {"sourceAddress": "src", "destinationAddress": "dst", "domain": "host"}
+    excluded = ["10.0.0.0/8"]
+
+    def excluded_ip(value):
+        try:
+            ip = ipaddress.ip_address(value)
+        except ValueError:
+            return False
+        return any(ip in ipaddress.ip_network(c) for c in excluded)
+
+    iocs = {v for v, _ in ioc_rows}
+    expected = {}
+    for rec in records:
+        found = {}
+        for ioc_type, norm_types in ioc_types.items():
+            for nt in norm_types:
+                value = rec.get(fields.get(nt))
+                if value is not None and value in iocs and not excluded_ip(value):
+                    found.setdefault(ioc_type, set()).add(value)
+        expected[rec["id"]] = found or None
+
+    df = spark.createDataFrame(
+        [(r["id"], r["src"], r["dst"], r["host"]) for r in records],
+        "id string, src string, dst string, host string",
+    ).select("id", F.struct("src", "dst", "host").alias("record"))
+    normed = Normalizer(NormalizationSpec(types={
+        nt: [PathSpec(path=path)] for nt, path in fields.items()
+    })).apply(df, record_id=F.col("id"))
+    ioc = spark.createDataFrame(ioc_rows, "ioc_value string, sub_type string")
+    out = ThreatIntel(ioc, ioc_types, excluded_cidrs=excluded).annotate(normed)
+    got = {
+        r["id"]: None if r["streamalert_ioc"] is None
+        else {k: set(v) for k, v in r["streamalert_ioc"].items()}
+        for r in out.select("id", "streamalert_ioc").collect()
+    }
+    assert got == expected
+    assert expected["r4"] is None and expected["r2"] == {"ip": {"8.8.8.8"}, "domain": {"8.8.8.8"}}
+
+
 def test_lookup_broadcast_dict(spark):
     """lookup_tables core.py:141-152 — get() API on broadcast tables."""
     from streamalert_spark.enrich.lookup_tables import LookupTables
@@ -203,6 +268,11 @@ def test_datatype_routing(spark):
         "ip_address": [PathSpec(path="src_ip", function="src")],
     }))
     normed = normalizer.apply(df)
+    # get_values_for_normalized_type (normalize.py:337-352)
+    values = {r["name"]: r["ips"] for r in normed.select(
+        F.col("record.name").alias("name"),
+        Normalizer.values_for_type(normed, "ip_address").alias("ips")).collect()}
+    assert values == {"alice": ["10.0.0.1"], "bob": []}
 
     reg = RuleRegistry()
     reg.add(Rule(name="by_datatype", expr=lambda r: F.lit(True),

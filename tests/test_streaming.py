@@ -756,7 +756,7 @@ def test_batch_and_streaming_merges_agree(spark, tmp_path):
     its timeout) and streaming_merge_event_time (after the watermark
     passes) give the same merged rows on a fixture that spans several
     windows and holds a 51-alert burst. Rules with no merge window (0 or
-    NULL) merge over one minute in both streaming modes."""
+    NULL) never merge on any path: each alert is a one-alert group."""
     from streamalert_spark.alerts.merge import merge_alerts_batch
     from streamalert_spark.streaming.merge import (
         streaming_merge, streaming_merge_event_time,
@@ -771,7 +771,6 @@ def test_batch_and_streaming_merges_agree(spark, tmp_path):
     pt_dir, et_dir = tmp_path / "pt_in", tmp_path / "et_in"
     pt_dir.mkdir()
     et_dir.mkdir()
-    # not given to merge_alerts_batch, which groups over the raw window
     no_window = [_merge_alert(80 + i, s, "carol", rule=rule, window=window)
                  for rule, window in (("r0", 0), ("rnull", None))
                  for i, s in enumerate((0, 30, 59, 61, 90))]
@@ -779,17 +778,21 @@ def test_batch_and_streaming_merges_agree(spark, tmp_path):
         _write_jsonl(d / "a.jsonl", fixture)
         _write_jsonl(d / "no_window.jsonl", no_window)
 
-    def full_rows(rows, windowed=True):
-        return Counter(tuple(r) for r in rows
-                       if (r["rule_name"] not in ("r0", "rnull")) == windowed)
+    def full_rows(rows):
+        return Counter(tuple(r) for r in rows)
 
     pt = (streaming_merge(spark.readStream.schema(_MERGE_IN_SCHEMA).json(str(pt_dir)))
           .writeStream.format("memory").queryName("agree_pt").outputMode("append")
           .option("checkpointLocation", str(tmp_path / "ckpt_pt")).start())
     try:
         batch = full_rows(merge_alerts_batch(
-            spark.read.schema(_MERGE_IN_SCHEMA).json(str(pt_dir / "a.jsonl"))).collect())
-        assert sorted(k[2] for k in batch.elements()) == [1, 1, 1, 1, 2, 3, 50]
+            spark.read.schema(_MERGE_IN_SCHEMA).json(str(pt_dir))).collect())
+        assert sorted(k[2] for k in batch.elements()
+                      if k[0] not in ("r0", "rnull")) == [1, 1, 1, 1, 2, 3, 50]
+        # 0, 30, 59, 61 and 90 s under no window: five one-alert groups a rule
+        assert sorted((k[0], k[2]) for k in batch.elements()
+                      if k[0] in ("r0", "rnull")) == (
+            [("r0", 1)] * 5 + [("rnull", 1)] * 5)
 
         et_src = spark.readStream.schema(_MERGE_IN_SCHEMA).json(str(et_dir))
         et = (streaming_merge_event_time(et_src, watermark_delay="1 minute")
@@ -812,18 +815,13 @@ def test_batch_and_streaming_merges_agree(spark, tmp_path):
         pt_rows = []
         while time.time() < deadline:
             pt_rows = spark.sql("SELECT * FROM agree_pt").collect()
-            if len(pt_rows) >= sum(batch.values()) + 4:
+            if len(pt_rows) >= sum(batch.values()):
                 break
             time.sleep(5)
     finally:
         pt.stop()
     assert full_rows(et_rows) == batch
     assert full_rows(pt_rows) == batch
-    no_window_groups = full_rows(et_rows, windowed=False)
-    assert no_window_groups == full_rows(pt_rows, windowed=False)
-    # one-minute greedy groups of 0, 30, 59, 61, 90 s: [0, 30, 59], [61, 90]
-    assert sorted((k[0], k[2]) for k in no_window_groups.elements()) == [
-        ("r0", 2), ("r0", 3), ("rnull", 2), ("rnull", 3)]
 
 
 def test_streaming_dedupe_across_microbatches(spark, tmp_path):
