@@ -21,6 +21,12 @@ Spark mapping (SURVEY.md §2.3/§2.7), one pass shared by ``hits`` and
   sorted set of (ioc_type, value) pairs, projected into the
   map<ioc_type, array<value>> and left-joined back to the records.
 
+The pipeline calls ``annotate`` only for a log type whose rules read the
+map (``RulesEngine.reads``), where the reference probes every record
+(rules_engine.py:480-481). Only native rule columns (``expr`` and native
+matchers) can read it: Python rule bodies receive the record alone, while
+reference bodies read ``record['streamalert:ioc']``.
+
 The 100-key batching disappears — the join IS the batch. CIDR exclusion
 is a native range comparison on the IPv4 integer (no UDF).
 

@@ -87,6 +87,10 @@ _CHANGED_THIS_ROUND: list[str] = [
     # ThreatIntel.hits now reads all candidates through one explode
     "threat_intel_hits",
     "threat_intel_feed_ingest",
+    # RulesEngine.run explodes native hits in its first projection, and
+    # its Python pass emits the alert rows
+    "rule_alerts_native",
+    "alert_merge_windowed",
 ]
 
 

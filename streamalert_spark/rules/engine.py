@@ -6,38 +6,47 @@ run the rule body (exceptions -> False, rule.py:160-164), build an Alert.
 
 Spark plan per log type — one pass over the records, whatever the rule
 count (cheap predicates stay native and run BEFORE any Python, the
-'optimizer' of SURVEY.md §4: Catalyst cannot push into opaque Python):
+'optimizer' of SURVEY.md §4: Catalyst cannot push into opaque Python).
+The hit column is the array of the rules whose native conditions hold:
+datatypes routing, req_subkeys (rules_engine.py:135-170), native matcher
+twins and rule.expr, evaluated JVM-side in one projection.
 
-  records(log_type)
-    .select(_sa_hits = [i for each rule i whose native conditions hold])
-        -- datatypes routing, req_subkeys (rules_engine.py:135-170),
-        -- native matcher twins, rule.expr: one projection, JVM-side
-    .filter(size(_sa_hits) > 0)
-    [.mapInPandas(fused)]   -- only when some rule has Python matchers, a
-                            -- body or dynamic outputs. The record crosses
-                            -- into Python only on rows where one of those
-                            -- rules' native prefilter holds; rows hit only
-                            -- by native rules pass through with their hit
-                            -- array and alert strings. Drops the rules
-                            -- whose Python side fails, attaches dynamic
-                            -- outputs.
-    .posexplode(_sa_hits)   -- one alert row per surviving (record, rule)
-    .select(alert columns)  -- rule metadata from a literal array indexed
-                            -- by rule: name, description, outputs (or the
-                            -- staged / dynamic override), context, merge
-                            -- keys and window
+  native rules only (two DataFrame steps):
+    records.select(carried alert strings, explode(hits) as _sa_rule)
+    .select(alert columns)
+
+  some rule with Python matchers, a body or dynamic outputs (four):
+    records.select(record where a Python-side rule's native side holds,
+                   hits, carried alert strings)
+    .filter(size(hits) > 0)
+    .mapInPandas(fused)     -- every Python matcher, body and dynamic
+                            -- output in one Arrow pass, emitting one row
+                            -- per surviving (record, rule); rows hit only
+                            -- by native rules pass through without the
+                            -- record
+    .select(alert columns)
+
+The alert columns take rule metadata from a literal array indexed by
+_sa_rule: name, description, outputs (or the staged / dynamic override),
+context, merge keys and window.
+
+Python matchers and bodies receive only the record, so the hit column is
+the only reader of any other column of the frame, such as the
+``streamalert_ioc`` annotation; ``RulesEngine.reads`` answers whether it
+reads one, which lets the pipeline skip building an unread annotation.
 
 The engine reads its input once per log type; materializing that input
 (so a micro-batch is scanned and enriched once) is the caller's choice —
 ``StreamingPipeline.run_stream_foreach_batch`` persists each micro-batch.
 The rule-dependent columns are built once per engine and log type and
-reused for every frame: building them costs py4j round trips comparable
-to executing a small micro-batch.
+reused for every frame: each DataFrame step costs a py4j round trip and an
+analysis of the whole tree, comparable to executing a small micro-batch.
 """
 
 from __future__ import annotations
 
 import copy
+import logging
 import os
 import time
 from collections.abc import Iterator
@@ -45,6 +54,7 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -149,15 +159,16 @@ class RulesEngine:
     def _python_pass(df: DataFrame, evals: list, stats: dict, record_col: str,
                      carried: list[str]) -> DataFrame:
         """Run every rule's Python matchers, body and dynamic outputs in one
-        mapInPandas. ``evals[i]`` is (python matchers, body, context,
-        dynamic-output fns) for rule i, or None for a fully native rule.
-        ``record_col`` is null on rows where no Python-side rule hit
-        natively; those rows pass through unchanged, as do the ``carried``
-        string columns. Exceptions map to False (rule.py:142-164) and the
-        context is deep-copied per call (rule.py:152-157). One plain record
-        serves every rule of a row, as in the reference loop. ``stats`` maps
-        a rule index to its (time_acc, count_acc) pair timing the body
-        (stats.py:35-57)."""
+        mapInPandas, which emits one row per surviving (record, rule): the
+        ``carried`` string columns, the rule index ``_sa_rule`` and its
+        dynamic outputs ``_sa_dyn``. ``evals[i]`` is (python matchers, body,
+        context, dynamic-output fns) for rule i, or None for a fully native
+        rule. ``record_col`` is null on rows where no Python-side rule hit
+        natively; every hit of those rows survives. Exceptions map to False
+        (rule.py:142-164) and the context is deep-copied per call
+        (rule.py:152-157). One plain record serves every rule of a row, as
+        in the reference loop. ``stats`` maps a rule index to its (time_acc,
+        count_acc) pair timing the body (stats.py:35-57)."""
 
         def fired(record, i: int, ms: list, calls: list) -> bool:
             python_matchers, process, base_context, _ = evals[i]
@@ -198,28 +209,31 @@ class RulesEngine:
             for pdf in batches:
                 ms = [0.0] * len(evals)
                 calls = [0] * len(evals)
-                hits_out, dyn_out = [], []
-                for rec, hits in zip(pdf[record_col], pdf["_sa_hits"]):
+                at, rules_out, dyn_out = [], [], []
+                for n, (rec, hits) in enumerate(zip(pdf[record_col], pdf["_sa_hits"])):
                     hits = [int(i) for i in hits]
                     if rec is None:
-                        hits_out.append(hits)
-                        dyn_out.append([[] for _ in hits])
-                        continue
-                    record = _to_plain(rec)
-                    kept = [i for i in hits if evals[i] is None or fired(record, i, ms, calls)]
-                    hits_out.append(kept)
-                    dyn_out.append([dynamic(record, i) if evals[i] is not None and evals[i][3]
-                                    else [] for i in kept])
+                        kept, record = hits, None
+                    else:
+                        record = _to_plain(rec)
+                        kept = [i for i in hits if evals[i] is None or fired(record, i, ms, calls)]
+                    at.extend([n] * len(kept))
+                    rules_out.extend(kept)
+                    dyn_out.extend(dynamic(record, i) if evals[i] is not None and evals[i][3]
+                                   else [] for i in kept)
                 for i, (t_acc, c_acc) in stats.items():
                     if calls[i]:
                         t_acc.add(ms[i])
                         c_acc.add(calls[i])
-                yield pdf.drop(columns=[record_col]).assign(_sa_hits=hits_out, _sa_dyn=dyn_out)
+                # typed explicitly: a batch may yield no alert rows
+                yield pdf[carried].iloc[at].reset_index(drop=True).assign(
+                    _sa_rule=pd.Series(rules_out, dtype="int32"),
+                    _sa_dyn=pd.Series(dyn_out, dtype=object))
 
         schema = T.StructType(
             [T.StructField(c, T.StringType()) for c in carried]
-            + [T.StructField("_sa_hits", T.ArrayType(T.IntegerType())),
-               T.StructField("_sa_dyn", T.ArrayType(T.ArrayType(T.StringType())))]
+            + [T.StructField("_sa_rule", T.IntegerType()),
+               T.StructField("_sa_dyn", T.ArrayType(T.StringType()))]
         )
         return df.mapInPandas(run, schema=schema)
 
@@ -256,19 +270,19 @@ class RulesEngine:
         if alert_id is not None:
             carried.append(alert_id.cast("string").alias("_sa_id"))
 
-        # 1. one projection: the indexes of the rules whose native side holds
-        cur = df.select(F.col(record_col).alias("_sa_rec"), plan.hits.alias("_sa_hits"),
-                        *carried).filter(F.size("_sa_hits") > 0)
-        # 2. one Arrow pass for every Python matcher, body and dynamic output
-        if plan.evals is not None:
-            cur = cur.withColumn("_sa_rec", plan.python_rec)
-            cur = self._python_pass(cur, plan.evals, plan.stats, "_sa_rec",
-                                    ["_sa_record", "_sa_created", "_sa_dt"]
-                                    + (["_sa_id"] if alert_id is not None else []))
+        if plan.evals is None:
+            # native rules only: an alert row per (record, rule whose native
+            # side holds), exploded straight off the records
+            cur = df.select(*carried, F.explode(plan.hits).alias("_sa_rule"))
         else:
-            cur = cur.drop("_sa_rec")
-        # 3. one explode: an alert row per surviving (record, rule)
-        cur = cur.select("*", F.posexplode("_sa_hits").alias("_sa_pos", "_sa_rule"))
+            # the rows some rule's native side holds, the record kept where a
+            # Python-side rule hit, then one Arrow pass for every Python
+            # matcher, body and dynamic output, emitting the alert rows
+            cur = self._python_pass(
+                df.select(plan.python_rec.alias("_sa_rec"), plan.hits.alias("_sa_hits"), *carried)
+                .filter(F.size("_sa_hits") > 0),
+                plan.evals, plan.stats, "_sa_rec",
+                ["_sa_record", "_sa_created", "_sa_dt"] + (["_sa_id"] if alert_id is not None else []))
         key = (cluster, source_service, source_entity, log_type)
         if key not in plan.rows:
             plan.rows[key] = alert_row(
@@ -286,6 +300,32 @@ class RulesEngine:
         # the id is built per call: F.uuid() draws its seed when it is built
         aid = F.col("_sa_id") if alert_id is not None else F.uuid()
         return cur.select(aid.cast("string").alias("id"), *plan.rows[key][1:])
+
+    def reads(self, df: DataFrame, log_type: str, column: str, record_col: str = "record") -> bool:
+        """Whether the native side of ``log_type``'s rules reads ``column``,
+        which ``df`` lacks: the fused hit column is resolved against ``df``
+        and fails on exactly that column. Python matchers and bodies see
+        only the record, so the hit column is the only reader. Decided once
+        per log type and frame columns."""
+        plan = self._plan(df, log_type, record_col, None, None)
+        if plan is None:
+            return False
+        key = (column, tuple(df.columns))
+        if key not in plan.reads:
+            # PySpark logs every analysis failure; this one is the answer
+            quiet = logging.getLogger("DataFrameQueryContextLogger")
+            was, quiet.disabled = quiet.disabled, True
+            try:
+                df.select(plan.hits)
+                plan.reads[key] = False
+            except AnalysisException as e:
+                if not (e.getCondition() or "").startswith("UNRESOLVED_COLUMN"):
+                    raise
+                missing = e.getMessageParameters()["objectName"].split(".")[0]
+                plan.reads[key] = missing.strip("`").lower() == column.lower()
+            finally:
+                quiet.disabled = was
+        return plan.reads[key]
 
     def _plan(self, df: DataFrame, log_type: str, record_col: str,
               staged_rules: dict[str, bool] | None,
@@ -365,13 +405,12 @@ class RulesEngine:
             # outputs (rules_engine.py:310-338 format check)
             outputs = F.when(F.col("_sa_rule").isin(dynamic), F.array_distinct(F.concat(
                 meta["outputs"],
-                F.filter(F.col("_sa_dyn")[F.col("_sa_pos")], lambda o: o.rlike(_VALID_OUTPUT)),
+                F.filter(F.col("_sa_dyn"), lambda o: o.rlike(_VALID_OUTPUT)),
             ))).otherwise(meta["outputs"])
         plan = _LogTypePlan(
             hits=hits,
             evals=evals if py_idx else None,
-            python_rec=(F.when(F.exists("_sa_hits", lambda h: h.isin(py_idx)), F.col("_sa_rec"))
-                        if py_idx else None),
+            python_rec=F.when(F.exists(hits, lambda h: h.isin(py_idx)), record) if py_idx else None,
             stats=stats,
             meta=meta,
             outputs=outputs,
@@ -392,6 +431,7 @@ class _LogTypePlan:
     meta: Column                   # metadata struct of the row's _sa_rule
     outputs: Column | None         # outputs with dynamic outputs merged in
     rows: dict = field(default_factory=dict)   # alert_row projections by source
+    reads: dict = field(default_factory=dict)  # (column, frame columns) -> hits read it
 
 
 def _all_of(conds: list[Column]) -> Column | None:

@@ -31,6 +31,11 @@ _DEFAULTS = {
     # far more splits than cores, so a minimum of defaultParallelism is free.
     "spark.sql.files.minPartitionNum": str(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))),
     "spark.ui.enabled": "false",
+    # No Python call-site capture per Column function: with it on, every
+    # F.* call makes extra py4j round trips, which is much of the driver's
+    # cost of building a micro-batch plan. Error messages then omit the
+    # Python call site.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Long-lived sessions compile one codegen class per plan fragment; the
     # JVM's default 240MB code cache fills after ~100 distinct plans, JIT
     # compilation silently stops, and compute-heavy stages degrade 10-20x.

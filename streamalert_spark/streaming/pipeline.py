@@ -12,26 +12,34 @@ alerts table).
     source (file/kafka/rate) with columns (value, service, resource)
       -> classify per (service, resource) route      [§2.2 projections]
       -> normalize + record ids                      [§2.3 projection]
-      -> IOC annotate (broadcast join, per batch)    [§2.3 join]
+      -> IOC annotate (broadcast join), only for a   [§2.3 join]
+         log type whose rules read streamalert_ioc
       -> rules: per log type one native hit-array
          projection, one mapInPandas for every
          Python rule, one explode to alert rows      [§2.4 fused pass]
-      -> log types unioned into one alerts frame
+      -> log types unioned by position into one alerts frame
       -> sinks: alerts parquet, historical store, streamalert_outputs delivery
       -> optional: streaming_merge for merge-configured rules
 
+The micro-batch plan is rebuilt on the driver for every batch, so it holds
+only what the batch's rules consume: the reference annotates every record
+before its rules run (rules_engine.py:480-481), but only a rule's native
+columns can read the annotation here (Python bodies receive the record),
+so ``RulesEngine.reads`` decides once per log type whether its hit column
+reads ``streamalert_ioc``; an unread annotation is never built.
+
 ``build_alerts`` builds the plan for any source frame;
 ``run_stream_foreach_batch`` is the streaming entry. It persists each
-micro-batch once, so every log type's branch reads the same scan, and each
-log type's normalized frame before IOC annotation, so its uuid record ids
-are drawn once and the annotation's self-join reads them from the cache.
-Both are released after the batch's write.
+micro-batch once, so every log type's branch reads the same scan, and the
+normalized frame of each log type it annotates, so its uuid record ids are
+drawn once and the annotation's self-join reads them from the cache. Both
+are released after the batch's write.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import cached_property
+from functools import cached_property, reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
@@ -50,7 +58,8 @@ class StreamingPipeline:
     normalizers: dict[str, Normalizer] | None = None   # per log type
     # IOC detection between normalization and rules (rules_engine.py:480-481):
     # normalized records gain a 'streamalert_ioc' map column that rule
-    # expressions can reference (F.col('streamalert_ioc'))
+    # expressions and native matchers can reference (F.col('streamalert_ioc'));
+    # a log type none of whose rules reads it is not annotated
     threat_intel: ThreatIntel | None = None
     cluster: str = ""
 
@@ -76,6 +85,15 @@ class StreamingPipeline:
 
         Works identically on a batch frame (tests/golden events) and a
         readStream frame — the plan is the same; only the sink differs.
+
+        Nothing is persisted here. Where a log type is IOC-annotated, its
+        normalized frame is therefore evaluated twice, once under the
+        candidate explode and once under the join back, and its
+        ``F.uuid()`` record ids agree between the two only because uuid
+        draws its seed when the column is built and both evaluations read
+        the same rows in the same partition order, as a file or table
+        source does. For a source without that guarantee, persist it
+        first or use ``run_stream_foreach_batch``.
         """
         if self.threat_intel is not None and self.normalizers and source.isStreaming:
             # IOC annotation is aggregation-shaped (per-record hit-map
@@ -97,9 +115,10 @@ class StreamingPipeline:
         event_time: Column | None = None,
         held: list[DataFrame] | None = None,
     ) -> DataFrame | None:
-        """The alerts plan. With ``held``, each normalized frame that feeds
-        IOC annotation is persisted and appended to ``held`` for the caller
-        to release."""
+        """The alerts plan. A log type's normalized frame is annotated with
+        IOCs only when its rules read ``streamalert_ioc``; with ``held``, that
+        frame is persisted first and appended to ``held`` for the caller to
+        release."""
         batch = self._classifier.classify(
             source, raw_col=raw_col, service=service, resource=resource)
         engine = self._engine
@@ -112,7 +131,8 @@ class StreamingPipeline:
             normalizer = (self.normalizers or {}).get(log_type)
             if normalizer is not None:
                 cur = normalizer.apply(cur)
-                if self.threat_intel is not None:
+                if (self.threat_intel is not None
+                        and engine.reads(cur, log_type, "streamalert_ioc")):
                     if held is not None:
                         cur = cur.persist()
                         held.append(cur)
@@ -129,10 +149,8 @@ class StreamingPipeline:
                 alert_frames.append(alerts)
         if not alert_frames:
             return None
-        out = alert_frames[0]
-        for f_ in alert_frames[1:]:
-            out = out.unionByName(f_)
-        return out
+        # every frame is alert_row's projection: union by position
+        return reduce(DataFrame.union, alert_frames)
 
     def run_stream_foreach_batch(
         self,
@@ -147,11 +165,11 @@ class StreamingPipeline:
     ):
         """The streaming entry: text files under ``source_path`` -> alerts
         parquet; returns the StreamingQuery. Each micro-batch runs classify
-        -> normalize -> IOC annotate -> rules with BATCH semantics inside
-        foreachBatch, so the IOC hit-map aggregation plans (append mode
-        cannot) and, like the reference's per-invocation DynamoDB probe,
-        each micro-batch re-reads the IOC frame: IOC refresh needs no
-        query restart. Exactly-once: each batch OVERWRITES its own
+        -> normalize -> IOC annotate (where a rule reads it) -> rules with
+        BATCH semantics inside foreachBatch, so the IOC hit-map aggregation
+        plans (append mode cannot) and, like the reference's per-invocation
+        DynamoDB probe, each micro-batch re-reads the IOC frame: IOC refresh
+        needs no query restart. Exactly-once: each batch OVERWRITES its own
         batch-id-keyed partition directory, so a micro-batch retried
         after a sink write but before the checkpoint commit replaces its
         own output instead of appending duplicates (the standard
@@ -170,8 +188,8 @@ class StreamingPipeline:
         )
 
         def process(batch_df, batch_id: int) -> None:
-            # one scan of the micro-batch and one normalization per log type
-            # serve every branch of the plan; released after the write
+            # one scan of the micro-batch and one normalization per annotated
+            # log type serve every branch of the plan; released after the write
             held = [batch_df.persist()]
             try:
                 alerts = self._alerts(batch_df, service, resource, held=held)

@@ -152,3 +152,14 @@ def test_streaming_metrics_listener(spark, tmp_path):
     assert sink, "no observed metrics captured"
     m = sink[0]["metrics"]["records"]
     assert m[M.TOTAL_RECORDS] == 5
+
+
+def test_session_skips_python_call_site_capture(spark):
+    """get_spark (which built the ``spark`` fixture) turns off PySpark's
+    per-Column call-site capture, which costs py4j round trips on every F.*
+    call while a plan is built. The fixture is checked rather than a fresh
+    get_spark() call, which would reset the shared session's runtime confs."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()

@@ -85,6 +85,44 @@ def test_threat_intel_annotate_one_explode_one_aggregate(spark):
     assert agg_shuffles == 1, "\n".join(lines)
 
 
+def test_pipeline_annotates_only_for_a_rule_reading_iocs(spark):
+    """With a ThreatIntel but no rule reading streamalert_ioc, the alerts
+    plan holds no IOC explode (inline Generate) and no aggregate, not even
+    before optimization; a rule that reads the map brings one of each."""
+    from streamalert_spark.enrich.threat_intel import ThreatIntel
+    from streamalert_spark.normalize.normalizer import NormalizationSpec, Normalizer, PathSpec
+    from streamalert_spark.rules.registry import Rule, RuleRegistry
+    from streamalert_spark.schema.registry import LogSchema, SchemaRegistry
+    from streamalert_spark.session import local_rows_df
+    from streamalert_spark.streaming.pipeline import StreamingPipeline
+
+    schemas = SchemaRegistry()
+    schemas.register(LogSchema(name="app:conn", schema={"event_id": "string", "src": "string"}))
+    source = local_rows_df(spark, [('{"event_id": "e1", "src": "1.2.3.4"}',)], "value string")
+    ioc = local_rows_df(spark, [("1.2.3.4", "mal_ip")], "ioc_value string, sub_type string")
+
+    def analyzed_nodes(rules):
+        pipeline = StreamingPipeline(
+            schemas=schemas, rules=rules,
+            normalizers={"app:conn": Normalizer(NormalizationSpec(
+                types={"ip_address": [PathSpec(path="src")]}))},
+            threat_intel=ThreatIntel(ioc, {"ip": ["ip_address"]}))
+        plan = pipeline.build_alerts(source)._jdf.queryExecution().analyzed().toString()
+        return [line.lstrip(" :+-") for line in plan.splitlines()]
+
+    rules = RuleRegistry()
+    rules.add(Rule(name="conn_any", logs=["app:conn"], expr=lambda rec: rec["src"].isNotNull()))
+    nodes = analyzed_nodes(rules)
+    assert not any(n.startswith("Generate inline") for n in nodes), "\n".join(nodes)
+    assert not any(n.startswith("Aggregate") for n in nodes), "\n".join(nodes)
+
+    rules.add(Rule(name="conn_ioc", logs=["app:conn"],
+                   expr=lambda rec: F.col("streamalert_ioc").isNotNull()))
+    nodes = analyzed_nodes(rules)
+    assert sum(n.startswith("Generate inline") for n in nodes) == 1, "\n".join(nodes)
+    assert sum(n.startswith("Aggregate") for n in nodes) == 1, "\n".join(nodes)
+
+
 def test_lookup_enrich_is_broadcast_join(spark):
     from streamalert_spark.queries import load_all
 

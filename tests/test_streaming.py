@@ -1221,6 +1221,167 @@ def test_foreach_batch_reads_each_line_once_and_matches_batch(spark, tmp_path):
         {"ioc_hit": 2, "odd_event": 3, "failed_login": 2, "root_user": 2})
 
 
+_IOCS = {"1.2.3.4", "5.6.7.8"}
+
+
+def _mixed_ioc_pipeline(spark) -> StreamingPipeline:
+    """Two normalized log types behind one ThreatIntel. app:conn has a rule
+    reading streamalert_ioc through a registered native matcher; app:auth
+    has IOC values in its normalization but no rule that reads the map."""
+    from streamalert_spark.enrich.threat_intel import ThreatIntel
+
+    schemas = SchemaRegistry()
+    schemas.register(LogSchema(
+        name="app:conn", schema={"event_id": "string", "src": "string"}))
+    schemas.register(LogSchema(
+        name="app:auth", schema={"event_id": "string", "user": "string", "ip": "string"}))
+    rules = RuleRegistry()
+    rules.matcher(lambda r: False, name="ioc_ip",
+                  expr=lambda rec: F.map_contains_key(F.col("streamalert_ioc"), "ip"))
+    rules.add(Rule(name="conn_ioc", matchers=["ioc_ip"], logs=["app:conn"],
+                   outputs=["slack:alerts"]))
+    rules.add(Rule(name="conn_odd", logs=["app:conn"], outputs=["slack:alerts"],
+                   process=lambda r: int(r["event_id"][1:]) % 2 == 1))
+    rules.add(Rule(name="auth_root", logs=["app:auth"], outputs=["slack:alerts"],
+                   expr=lambda rec: rec["user"] == "root"))
+    rules.add(Rule(name="auth_ip", logs=["app:auth"], outputs=["slack:alerts"],
+                   process=lambda r: r["ip"] == "1.2.3.4"))
+    ioc = spark.createDataFrame([(v, "mal_ip") for v in sorted(_IOCS)],
+                                "ioc_value string, sub_type string")
+    return StreamingPipeline(
+        schemas=schemas, rules=rules,
+        normalizers={
+            "app:conn": Normalizer(NormalizationSpec(types={"ip_address": [PathSpec(path="src")]})),
+            "app:auth": Normalizer(NormalizationSpec(types={"ip_address": [PathSpec(path="ip")]})),
+        },
+        threat_intel=ThreatIntel(ioc, {"ip": ["ip_address"]}),
+        cluster="test",
+    )
+
+
+def _mixed_ioc_lines(n: int, offset: int = 0) -> list[dict]:
+    ips = ["1.2.3.4", "8.8.8.8", "5.6.7.8", "9.9.9.9"]
+    out = []
+    for i in range(offset, offset + n):
+        out.append({"event_id": f"c{i}", "src": ips[i % 4]})
+        out.append({"event_id": f"a{i}", "user": "root" if i % 3 == 0 else "bob",
+                    "ip": ips[(i + 1) % 4]})
+    return out
+
+
+def _mixed_ioc_model(lines: list[dict]) -> Counter:
+    """Pure-Python model that annotates every normalized record, then runs
+    the rules: {(rule, event_id): count}."""
+    expected = Counter()
+    for rec in lines:
+        value = rec.get("src", rec.get("ip"))
+        ioc = {"ip": [value]} if value in _IOCS else None
+        if "src" in rec:
+            if ioc is not None and "ip" in ioc:
+                expected[("conn_ioc", rec["event_id"])] += 1
+            if int(rec["event_id"][1:]) % 2 == 1:
+                expected[("conn_odd", rec["event_id"])] += 1
+        else:
+            if rec["user"] == "root":
+                expected[("auth_root", rec["event_id"])] += 1
+            if rec["ip"] == "1.2.3.4":
+                expected[("auth_ip", rec["event_id"])] += 1
+    return expected
+
+
+def _alert_multiset(df) -> Counter:
+    return Counter((r["rule_name"], json.loads(r["record"])["event_id"])
+                   for r in df.select("rule_name", "record").collect())
+
+
+def _union_leaves(plan) -> list:
+    """The non-Union subtrees under a (possibly nested) Union node."""
+    if plan.nodeName() != "Union":
+        return [plan]
+    children = plan.children()
+    return [leaf for i in range(children.size()) for leaf in _union_leaves(children.apply(i))]
+
+
+def test_ioc_annotation_only_where_a_rule_reads_it(spark, tmp_path):
+    """Of two normalized log types, only app:conn has a rule reading
+    streamalert_ioc (through a native matcher), so only its normalized
+    frame is annotated and persisted; the alerts of build_alerts and of
+    run_stream_foreach_batch equal a model that annotates everything."""
+    pipeline = _mixed_ioc_pipeline(spark)
+    lines = _mixed_ioc_lines(12)
+    expected = _mixed_ioc_model(lines)
+    assert expected[("conn_ioc", "c0")] == 1 and not expected[("conn_ioc", "c1")]
+
+    src_dir = tmp_path / "mixed_src"
+    src_dir.mkdir()
+    with open(src_dir / "b1.jsonl", "w") as fh:
+        fh.write("".join(json.dumps(x) + "\n" for x in lines))
+
+    alerts = pipeline.build_alerts(spark.read.text(str(src_dir)), service="kinesis", resource="s1")
+    assert _alert_multiset(alerts) == expected
+    # exactly one IOC aggregate in the analyzed plan, in app:conn's branch
+    analyzed = alerts._jdf.queryExecution().analyzed()
+    branches = {}
+    for leaf in _union_leaves(analyzed):
+        text = leaf.toString()
+        log_type = "app:conn" if "app:conn AS log_type" in text else "app:auth"
+        branches[log_type] = sum(line.lstrip(" :+-").startswith("Aggregate")
+                                 for line in text.splitlines())
+    assert branches == {"app:conn": 1, "app:auth": 0}, analyzed.toString()
+
+    held_per_batch = []
+    build = pipeline._alerts
+
+    def spy(*args, held=None, **kwargs):
+        out = build(*args, held=held, **kwargs)
+        if held is not None:
+            held_per_batch.append(list(held))
+        return out
+
+    pipeline._alerts = spy
+    q = pipeline.run_stream_foreach_batch(
+        spark, str(src_dir), str(tmp_path / "mixed_ckpt"), str(tmp_path / "mixed_alerts"),
+        service="kinesis", resource="s1", available_now=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert _alert_multiset(spark.read.parquet(str(tmp_path / "mixed_alerts"))) == expected
+    # the micro-batch and app:conn's normalized frame, nothing else
+    assert len(held_per_batch) == 1
+    batch_df, *normalized = held_per_batch[0]
+    assert batch_df.columns == ["value"]
+    assert [sorted(df.schema["record"].dataType.fieldNames()) for df in normalized] == [
+        ["event_id", "src"]]
+    assert "streamalert_normalization" in normalized[0].columns
+
+
+def test_build_alerts_with_ioc_matches_stream_over_multi_file_source(spark, tmp_path):
+    """build_alerts annotates an unpersisted normalized frame, whose uuid
+    record ids are drawn once per branch of the annotation's self-join;
+    over a multi-partition batch source its alerts still equal the
+    streaming entry's, which persists that frame, and the model's."""
+    pipeline = _mixed_ioc_pipeline(spark)
+    src_dir = tmp_path / "multi_src"
+    src_dir.mkdir()
+    lines = []
+    for k in range(3):
+        part = _mixed_ioc_lines(40, offset=40 * k)
+        lines += part
+        with open(src_dir / f"b{k}.jsonl", "w") as fh:
+            fh.write("".join(json.dumps(x) + "\n" for x in part))
+    source = spark.read.text(str(src_dir))
+    assert source.rdd.getNumPartitions() > 1
+
+    batch = _alert_multiset(pipeline.build_alerts(source, service="kinesis", resource="s1"))
+    q = pipeline.run_stream_foreach_batch(
+        spark, str(src_dir), str(tmp_path / "multi_ckpt"), str(tmp_path / "multi_alerts"),
+        service="kinesis", resource="s1", available_now=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    streamed = _alert_multiset(spark.read.parquet(str(tmp_path / "multi_alerts")))
+    assert batch == streamed == _mixed_ioc_model(lines)
+    assert sum(n for (rule, _), n in batch.items() if rule == "conn_ioc") == 60
+
+
 def test_late_data_drop_accounting(spark, tmp_path):
     """The stream_late_data_bounded scenario's drop count, pinned via
     the engine's own numRowsDroppedByWatermark metric: exactly the two
