@@ -106,32 +106,3 @@ def alert_row(
         dt.alias("dt"),
     ]
 
-
-def alert_columns(
-    rule,
-    record_json: Column,
-    event_time: Column,
-    cluster: str = "",
-    source_service: str = "",
-    source_entity: str = "",
-    log_type: str = "",
-    alert_id: Column | None = None,
-    staged: bool = False,
-    outputs_override: Column | None = None,
-) -> list[Column]:
-    """Projection list building one alert row from a triggering record
-    (reference _rule_analysis -> Alert(...), rules_engine.py:183-217).
-    outputs_override replaces the rule's static outputs (staging gate /
-    dynamic outputs)."""
-    return alert_row(
-        rule_meta_table([(rule, staged, None)])[0],
-        record_json,
-        F.date_format(event_time, ALERT_TS_FMT),
-        F.date_format(event_time, DT_PARTITION_FMT),
-        cluster=cluster,
-        source_service=source_service,
-        source_entity=source_entity,
-        log_type=log_type,
-        alert_id=alert_id,
-        outputs=outputs_override,
-    )

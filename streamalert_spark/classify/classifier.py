@@ -2,21 +2,27 @@
 
 Reference pipeline (streamalert/classifier/classifier.py:116-200,241-275):
 for each payload record, try every candidate log schema for its
-(service, resource) in declared config order; the first schema whose parser
-fully validates wins. Per record the parser does _parse -> _key_check ->
-_convert_type -> _matches_log_patterns (parsers.py:450-501). Records failing
-every schema are counted as invalid (classifier.py:202-215).
+(service, resource) in declared config order; the first schema whose
+parser fully validates wins. Per record the parser does _parse ->
+_key_check -> _convert_type -> _matches_log_patterns (parsers.py:450-501).
+Records failing every schema are counted as invalid (classifier.py:202-215).
 
 Spark strategy — all expression-generated, no UDFs:
-- each candidate schema contributes a validity predicate; the chosen schema
-  index is the first true one (ordered CASE WHEN — the columnar analogue of
-  first-match-wins trial parsing);
-- a per-schema output DataFrame projects the typed struct (coercion table in
-  schema/types.py, reference parsers.py:294-369) with optional-key backfill
-  (parsers.py:157-171) and the log_patterns fnmatch filter translated to
-  SQL LIKE (parsers.py:173-221);
-- invalid records split into a quarantine DataFrame with the raw payload
-  preserved (classifier.py:202-215 invalid accounting).
+- candidates sharing a row shape parse together into one trial struct
+  behind a Generate barrier (the group's trial frame);
+- each candidate contributes one ``accepted`` column: its parser's
+  validity (parse + key check) AND its coercion validity (coercion table
+  in schema/types.py, reference parsers.py:294-369). It is the one
+  acceptance rule; both outputs below are cuts of the trial frame by it;
+- a log type takes the rows its candidate accepted and no earlier
+  candidate did (ordered negation — the columnar analogue of
+  first-match-wins trial parsing), projects the typed struct with
+  optional-key backfill (parsers.py:157-171) and keeps the rows its
+  log_patterns fnmatch filter, translated to SQL LIKE, passes
+  (parsers.py:173-221); pattern-rejected rows are dropped, not
+  quarantined;
+- the quarantine holds the rows no candidate accepted, with the raw
+  payload preserved (classifier.py:202-215 invalid accounting).
 
 Scale: classification is a single projection pass over the scan — no
 shuffle, no Python. At 100 TB the cost is one from_json per candidate
@@ -27,7 +33,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
-from functools import cached_property
+from functools import cached_property, reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -107,14 +113,16 @@ def coerce_struct(parsed: Column, schema: LogSchema) -> Column:
 
 
 def coercion_valid(parsed: Column, typed: Column, schema: LogSchema) -> Column:
-    """A required field whose raw text was present but whose cast produced
-    null means a type failure -> record invalid (parsers.py:332-347).
-    Booleans never fail (lenient semantics); strings never fail."""
+    """A field whose raw text was present but whose cast produced null
+    means a type failure -> record invalid (parsers.py:332-347), for an
+    optional field too: numbers are judged on the cast itself, before the
+    optional-key backfill could mask it. Booleans never fail (lenient
+    semantics); strings never fail."""
     conds = []
     for name, tok in schema.schema.items():
         if tok in ("integer", "float"):
             raw_present = parsed[name].isNotNull() & (F.trim(parsed[name]) != "")
-            conds.append(~raw_present | typed[name].isNotNull())
+            conds.append(~raw_present | _coerce_field(parsed[name], tok).isNotNull())
         elif isinstance(tok, (dict, list)) and tok:
             conds.append(parsed[name].isNull() | typed[name].isNotNull())
     if not conds:
@@ -173,7 +181,7 @@ def log_patterns_filter(typed: Column, schema: LogSchema) -> Column:
 @dataclass
 class ClassifiedBatch:
     """Result of classifying one source batch: per-log-type typed frames +
-    the quarantine frame of records that matched no schema."""
+    the quarantine frame of records that no schema accepted."""
 
     by_log_type: dict[str, DataFrame]
     build_invalid: Callable[[], DataFrame] = field(repr=False)
@@ -187,49 +195,47 @@ class ClassifiedBatch:
 class Classifier:
     def __init__(self, registry: SchemaRegistry):
         self.registry = registry
-        # per candidate group: the parse/validity/coercion columns. They
+        # per candidate group: the parse/acceptance/coercion columns. They
         # reference columns by name only, so one build serves every frame
         # (micro-batch) classified on the same route.
         self._columns: dict[tuple, tuple] = {}
 
-    def _group_columns(self, prepared: list, idxs: list[int], rcol: str,
-                       has_env: bool) -> tuple[Column, list[tuple[Column, list[Column]]]]:
-        """(trials struct, [(row condition, output columns)] per candidate)
-        for candidates ``idxs`` sharing one exploded row shape."""
+    def _group_columns(self, prepared: list, idxs: list[int], rcol: str, has_env: bool
+                       ) -> tuple[Column, list[tuple[Column, list[Column]]], Column]:
+        """(trials struct, [(row condition, output columns)] per candidate,
+        any-candidate-accepted condition) for candidates ``idxs`` sharing
+        one exploded row shape."""
         key = (rcol, has_env, tuple((i, id(prepared[i][0])) for i in idxs))
         hit = self._columns.get(key)
         if hit is not None:
-            return hit[0], hit[1]
+            return hit[:3]
         trials = F.struct(*[
             prepared[i][1].parse_expr(prepared[i][0], F.col(rcol)).alias(f"t{i}")
             for i in idxs
         ])
-        valids = {
-            i: prepared[i][1].valid_expr(
-                prepared[i][0], F.col("_sa_raw"), F.col(f"_sa_t.t{i}"))
-            for i in idxs
-        }
         outs = []
-        # first-match-wins: schema i applies only where schemas 0..i-1 failed.
-        # Negation applies within a shared row shape; differing row shapes
+        # first-match-wins: candidate i is accepted when its parse, key
+        # check and coercion all succeed, and wins the row only where no
+        # earlier candidate was accepted (parsers.py:450-501). Negation
+        # applies within a shared row shape; differing row shapes
         # (json_path explode) are disjoint by source construction in the
         # reference config.
+        earlier: Column | None = None
         for i in idxs:
-            schema = prepared[i][0]
+            schema, p = prepared[i][0], prepared[i][1]
             parsed = F.col(f"_sa_t.t{i}")
-            cond = valids[i]
-            for j in idxs:
-                if j < i:
-                    cond = cond & ~valids[j]
             typed = coerce_struct(parsed, schema)
-            cond = cond & coercion_valid(parsed, typed, schema) & log_patterns_filter(typed, schema)
+            accepted = (p.valid_expr(schema, F.col("_sa_raw"), parsed)
+                        & coercion_valid(parsed, typed, schema))
+            cond = accepted if earlier is None else accepted & ~earlier
+            earlier = accepted if earlier is None else earlier | accepted
             cols = [typed.alias("record"), F.lit(schema.name).alias("log_schema_type")]
             if has_env:
                 cols.append(F.col("streamalert_envelope_keys"))
-            outs.append((cond, cols))
+            outs.append((cond & log_patterns_filter(typed, schema), cols))
         # the schemas stay referenced, so their ids in the key stay unique
-        self._columns[key] = (trials, outs, [prepared[i][0] for i in idxs])
-        return trials, outs
+        self._columns[key] = (trials, outs, earlier, [prepared[i][0] for i in idxs])
+        return trials, outs, earlier
 
     def classify(
         self,
@@ -265,78 +271,66 @@ class Classifier:
             groups.setdefault((id(pdf), rcol), []).append(i)
 
         frames: dict[int, DataFrame] = {}
+        trial_frames: list[tuple[DataFrame, str, Column]] = []
         for (_, rcol), idxs in groups.items():
             pdf = prepared[idxs[0]][2]
             extra = (["streamalert_envelope_keys"]
                      if "streamalert_envelope_keys" in pdf.columns else [])
-            trials, outs = self._group_columns(prepared, idxs, rcol, bool(extra))
+            trials, outs, accepted = self._group_columns(prepared, idxs, rcol, bool(extra))
+            # raw_col: the payload text the quarantine anti-joins on
             bdf = pdf.select(
-                *keep_cols, *extra,
+                *keep_cols, *extra, raw_col,
                 F.col(rcol).alias("_sa_raw"),
                 F.explode(F.array(trials)).alias("_sa_t"),
             )
+            trial_frames.append((bdf, rcol, accepted))
             for i, (cond, cols) in zip(idxs, outs):
                 frames[i] = bdf.filter(cond).select(*keep_cols, *cols)
         by_log_type = {prepared[i][0].name: frames[i] for i in range(len(prepared))}
 
         return ClassifiedBatch(
             by_log_type=by_log_type,
-            build_invalid=lambda: self._invalid(df, raw_col, keep_cols, prepared, groups))
+            build_invalid=lambda: _invalid(df, raw_col, keep_cols, trial_frames))
 
-    def _invalid(self, df: DataFrame, raw_col: str, keep_cols: list[str],
-                 prepared: list, groups: dict) -> DataFrame:
-        """Quarantine frame (classifier.py:202-215): a payload is invalid
-        only when NO candidate accepts it. Base-shape candidates judge the
-        original payload in one expression. Exploded-shape candidates
-        (json_path, json_regex_key) judge their extracted records; a
-        payload with an accepted record is carried back by its raw text
-        (validity is a function of the text alone, so the anti-join is
-        exact). Line-exploded CSV groups judge each line individually
-        (parsers.py:705-712 — invalid lines within a matched payload are
-        still bad records); lines whose payload another candidate accepts
-        are excluded. Diagnostics path — the re-derived parses cost ~2
-        evaluations per row, not ~20."""
-        def _valid_any(idxs: list[int], raw: Column) -> Column:
-            v = None
-            for i in idxs:
-                schema, p = prepared[i][0], prepared[i][1]
-                e = p.valid_expr(schema, raw, p.parse_expr(schema, raw))
-                v = e if v is None else (v | e)
-            return v
 
-        base_valid = None
-        accepted: DataFrame | None = None
-        line_groups: list[tuple[DataFrame, str, list[int]]] = []
-        for (_, rcol), idxs in groups.items():
-            pdf = prepared[idxs[0]][2]
-            if rcol == raw_col:
-                v = _valid_any(idxs, F.col(raw_col))
-                base_valid = v if base_valid is None else (base_valid | v)
-            elif rcol == "_sa_csv_line":
-                line_groups.append((pdf, rcol, idxs))
-            else:
-                ok = pdf.filter(_valid_any(idxs, F.col(rcol))).select(raw_col)
-                accepted = ok if accepted is None else accepted.unionByName(ok)
+def _invalid(df: DataFrame, raw_col: str, keep_cols: list[str],
+             trial_frames: list[tuple[DataFrame, str, Column]]) -> DataFrame:
+    """Quarantine frame (classifier.py:202-215): the trial rows where no
+    candidate's accepted column holds, the same column that routes rows
+    to ``by_log_type`` (log patterns filter accepted rows, they never
+    quarantine them). A base-shape group's rows are the payloads. An
+    exploded group (json_path, json_regex_key) accepts a payload through
+    any of its records and excuses it by its raw text; acceptance is a
+    function of the text alone, so the anti-join is exact. Line-exploded
+    CSV groups judge each line (parsers.py:705-712: invalid lines within
+    a matched payload are still bad records), excusing lines whose payload
+    a payload-level group accepts. With no base-shape group, a payload
+    whose records all fail, or that yields none, is quarantined whole;
+    with line groups only, each payload is judged by its lines."""
+    anchor = next((t for t in trial_frames if t[1] == raw_col), None)
+    accepted: list[DataFrame] = []
+    lines: list[DataFrame] = []
+    for bdf, rcol, ok in trial_frames:
+        if rcol == "_sa_csv_line":
+            lines.append(bdf.filter(~ok))
+        elif anchor is None or bdf is not anchor[0]:
+            accepted.append(bdf.filter(ok).select(raw_col))
 
-        def _unaccepted(frame: DataFrame) -> DataFrame:
-            return frame if accepted is None else frame.join(accepted, raw_col, "left_anti")
+    def _unaccepted(frame: DataFrame) -> DataFrame:
+        if not accepted:
+            return frame
+        return frame.join(reduce(DataFrame.union, accepted), raw_col, "left_anti")
 
-        invalid_frames: list[DataFrame] = []
-        payloads = df if base_valid is None else df.filter(~base_valid)
-        if base_valid is not None or not line_groups:
-            # with line-shape candidates only, each payload is judged by
-            # its lines below
-            invalid_frames.append(
-                _unaccepted(payloads).select(*keep_cols, F.col(raw_col).alias("raw")))
-        for pdf, rcol, idxs in line_groups:
-            group_invalid = ~_valid_any(idxs, F.col(rcol))
-            if base_valid is not None:
-                group_invalid = group_invalid & ~base_valid
-            invalid_frames.append(
-                _unaccepted(pdf.filter(group_invalid))
-                .select(*keep_cols, F.col(rcol).alias("raw")))
-
-        invalid = invalid_frames[0]
-        for f in invalid_frames[1:]:
-            invalid = invalid.unionByName(f)
-        return invalid
+    invalid_frames: list[DataFrame] = []
+    if anchor is not None:
+        bdf, _, ok = anchor
+        invalid_frames.append(
+            _unaccepted(bdf.filter(~ok)).select(*keep_cols, F.col(raw_col).alias("raw")))
+        accepted.append(bdf.filter(ok).select(raw_col))
+    elif not lines:
+        invalid_frames.append(
+            _unaccepted(df).select(*keep_cols, F.col(raw_col).alias("raw")))
+    for bdf in lines:
+        invalid_frames.append(
+            _unaccepted(bdf).select(*keep_cols, F.col("_sa_raw").alias("raw")))
+    return reduce(DataFrame.unionByName, invalid_frames)

@@ -91,6 +91,11 @@ _CHANGED_THIS_ROUND: list[str] = [
     # its Python pass emits the alert rows
     "rule_alerts_native",
     "alert_merge_windowed",
+    # the classifier routes and quarantines rows by one accepted column
+    # per candidate, coercion of optional numbers included
+    "classify_strict_json",
+    "optional_backfill_bool",
+    "parse_csv_multiline",
 ]
 
 

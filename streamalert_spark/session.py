@@ -51,11 +51,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine SparkSession.
+    """Build the engine SparkSession, or return the active one untouched.
 
     ``master``/``shuffle_partitions`` default from $SPARK_GRAFT_CPUS so the
-    bench driver controls parallelism without code changes.
+    benchmark harness sets parallelism without code changes. They and every
+    other option apply only when this call creates the session: applied to
+    an existing one, they would rewrite its runtime confs under its users.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus

@@ -41,7 +41,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import cached_property, reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from streamalert_spark.classify.classifier import Classifier
 from streamalert_spark.enrich.threat_intel import ThreatIntel
@@ -78,10 +78,9 @@ class StreamingPipeline:
         source: DataFrame,
         service: str = "",
         resource: str = "",
-        raw_col: str = "value",
-        event_time: Column | None = None,
     ) -> DataFrame | None:
-        """Source (streaming or batch) -> unioned alerts DataFrame.
+        """Source (streaming or batch) with a ``value`` text column ->
+        unioned alerts DataFrame.
 
         Works identically on a batch frame (tests/golden events) and a
         readStream frame — the plan is the same; only the sink differs.
@@ -104,23 +103,20 @@ class StreamingPipeline:
             raise ValueError(
                 "threat_intel annotation on a streaming source must run "
                 "per micro-batch — use run_stream_foreach_batch()")
-        return self._alerts(source, service, resource, raw_col, event_time)
+        return self._alerts(source, service, resource)
 
     def _alerts(
         self,
         source: DataFrame,
         service: str,
         resource: str,
-        raw_col: str = "value",
-        event_time: Column | None = None,
         held: list[DataFrame] | None = None,
     ) -> DataFrame | None:
         """The alerts plan. A log type's normalized frame is annotated with
         IOCs only when its rules read ``streamalert_ioc``; with ``held``, that
         frame is persisted first and appended to ``held`` for the caller to
         release."""
-        batch = self._classifier.classify(
-            source, raw_col=raw_col, service=service, resource=resource)
+        batch = self._classifier.classify(source, service=service, resource=resource)
         engine = self._engine
 
         alert_frames = []
@@ -140,7 +136,6 @@ class StreamingPipeline:
             alerts = engine.run(
                 cur,
                 log_type=log_type,
-                event_time=event_time,
                 cluster=self.cluster,
                 source_service=service,
                 source_entity=resource,
@@ -160,7 +155,6 @@ class StreamingPipeline:
         alerts_path: str,
         service: str = "",
         resource: str = "",
-        schema: str = "value string",
         available_now: bool = False,
     ):
         """The streaming entry: text files under ``source_path`` -> alerts
@@ -177,15 +171,11 @@ class StreamingPipeline:
         # eager routing validation — the per-batch loop would otherwise
         # silently drop every batch when no rule routes to any configured
         # log type
-        probe = spark.createDataFrame([], schema)
+        probe = spark.createDataFrame([], "value string")
         if self.build_alerts(probe, service=service, resource=resource) is None:
             raise ValueError("no rules routed to any configured log type")
 
-        src = (
-            spark.readStream.format("text")
-            .schema(schema)
-            .load(source_path)
-        )
+        src = spark.readStream.format("text").load(source_path)
 
         def process(batch_df, batch_id: int) -> None:
             # one scan of the micro-batch and one normalization per annotated

@@ -157,9 +157,19 @@ def test_streaming_metrics_listener(spark, tmp_path):
 def test_session_skips_python_call_site_capture(spark):
     """get_spark (which built the ``spark`` fixture) turns off PySpark's
     per-Column call-site capture, which costs py4j round trips on every F.*
-    call while a plan is built. The fixture is checked rather than a fresh
-    get_spark() call, which would reset the shared session's runtime confs."""
+    call while a plan is built."""
     from pyspark.errors.utils import is_debugging_enabled
 
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
+
+
+def test_get_spark_returns_the_active_session_untouched(spark):
+    """A get_spark() call while a session is active returns that session
+    and leaves its confs alone: the fixture's 8 shuffle partitions stay,
+    whatever $SPARK_GRAFT_CPUS says."""
+    from streamalert_spark.session import get_spark
+
+    assert get_spark(shuffle_partitions=3) is spark
+    assert get_spark() is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"

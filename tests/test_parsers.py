@@ -55,6 +55,7 @@ def test_json_type_coercion_failure_invalidates(spark):
     batch = _classify_one(spark, schema, ['{"n": 5}', '{"n": "5"}', '{"n": "abc"}'])
     vals = sorted(r["record"]["n"] for r in batch.by_log_type["t:int"].collect())
     assert vals == [5, 5]
+    assert [r["raw"] for r in batch.invalid.collect()] == ['{"n": "abc"}']
 
 
 def test_json_boolean_lenient_semantics(spark):
